@@ -30,6 +30,7 @@ Upload processing modes:
 
 from __future__ import annotations
 
+import datetime
 import json
 import queue
 import re
@@ -44,6 +45,14 @@ if TYPE_CHECKING:  # import cycle guard: worker imports service only
     from g_data_pipeline_spark.worker import JobWorker
 
 _INSIGHTS_RE = re.compile(r"^/insights/([0-9a-fA-F-]+)$")
+
+
+def _json_default(value: Any) -> str:
+    """Result rows of date/timestamp columns hold ``date``/``datetime``
+    values; they go over the wire as ISO-8601 strings."""
+    if isinstance(value, datetime.date):  # datetime is a date subclass
+        return value.isoformat()
+    raise TypeError(f"Object of type {type(value).__name__} is not JSON serializable")
 
 
 def _parse_multipart_file(content_type: str, body: bytes) -> tuple[str, bytes] | None:
@@ -90,7 +99,7 @@ class PipelineApp:
                 status, payload = "404 Not Found", {"error": "no such route"}
         except (ValueError, KeyError) as exc:
             status, payload = "400 Bad Request", {"error": str(exc)}
-        body = json.dumps(payload).encode()
+        body = json.dumps(payload, default=_json_default).encode()
         start_response(
             status,
             [

@@ -7,32 +7,26 @@ Plan shape (the scale story)
 The reference computes one Polars pass per statistic. Here the profile is a
 handful of flat ``df.agg(...)`` passes — counts, numeric stats, correlation
 matrix, percentiles — each a single scan + a single (tiny) shuffle of partial
-aggregate buffers regardless of column count (see ``profile(passes=...)``
-for the fused-single-scan variant and why split is the default). Top-k
-frequent values add one ``groupBy(col)`` per categorical column (its own
-shuffle, unavoidable for exact counts).
+aggregate buffers regardless of column count. The passes stay SEPARATE:
+whole-stage-codegen compile time is superlinear in plan width, and one fused
+mega-agg (11 distinct counts + 28 correlations + 32 stats) measured ~60 s of
+janino per call vs ~13 s total when split. Top-k frequent values add one
+``groupBy(col)`` per categorical column (its own shuffle, unavoidable for
+exact counts).
 
-100 TB notes, encoded as options rather than folklore:
-
-- ``distinct_method="approx"`` switches exact ``countDistinct`` (an Expand —
-  duplicates the input N_cols times pre-shuffle) to HLL
-  ``approx_count_distinct`` (constant-size sketch, no Expand).
-- ``percentile_method="approx"`` switches exact ``F.percentile`` (holds all
-  column values per group in memory on the reducer) to the GK-sketch
-  ``percentile_approx``. Exact mode matches the reference and the DuckDB
-  oracle (linear interpolation, SURVEY.md §4.3.5); approx is the scale
-  escape hatch documented in SURVEY.md §7.
-- ``percentile_method="auto"`` (the DEFAULT) resolves to one of the above
-  from the optimizer's size estimate BEFORE any job runs: inputs at or
-  under ``auto_percentile_max_bytes`` (default 4 GiB) get the exact
-  reference semantics; larger inputs get the sketch — so a user who never
-  touches the knob gets exact answers on test-sized data and never pays a
-  full per-column value sort on a 100 TB table by accident. The
-  oracle-gated queries pin ``exact`` explicitly and are unaffected.
-- ``deterministic=True`` computes mean/stddev/corr from exact decimal
-  accumulators (see functions.deterministic) so results are bit-reproducible
-  across partitionings and engines; default uses Spark's numerically-stable
-  built-ins (Welford-style), whose last bits depend on merge order.
+Exact or sketched: one size-derived rule
+----------------------------------------
+:func:`resolve_stat_method` reads the optimizer's size estimate of the input
+BEFORE any job runs. At or under :data:`EXACT_MAX_BYTES` (4 GiB), or when
+the size is unknown, the profile is exact: ``countDistinct`` and
+``F.percentile`` with linear interpolation, matching the reference and the
+DuckDB oracle (SURVEY.md §4.3.5). Above it, both switch to sketches: HLL
+``approx_count_distinct`` (constant-size, no Expand duplicating the input
+once per column before the shuffle) and the GK ``percentile_approx`` (no
+reducer holding every value of a column) — the scale escape hatch of
+SURVEY.md §7. Exact answers on test-sized data; a 100 TB table never pays a
+full per-column value sort by accident. The oracle-gated queries call the
+expression builders below with explicit methods and are unaffected.
 
 Semantics pinned against the reference (SURVEY.md §4.3):
 
@@ -50,6 +44,7 @@ Semantics pinned against the reference (SURVEY.md §4.3):
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -64,12 +59,15 @@ from g_data_pipeline_spark.operators.runprofile import (
 
 NUMERIC_STATS = ("min", "max", "mean", "median", "std_dev", "percentile_25", "percentile_75")
 
-#: Above this optimizer-estimated input size, percentile_method="auto"
-#: chooses the GK sketch over exact percentiles: exact F.percentile holds
-#: every value of a column in one aggregation buffer, so its memory bill is
-#: proportional to input rows — fine at gigabytes, a reducer OOM (or a
-#: multi-job order-statistics bill in "distributed" mode) at 100 TB.
-AUTO_PERCENTILE_MAX_BYTES = 4 * 1024**3
+#: Above this optimizer-estimated input size, profile() uses sketches (HLL
+#: distinct counts, GK percentiles) instead of exact aggregates: exact
+#: F.percentile holds every value of a column in one aggregation buffer, and
+#: countDistinct expands the input once per column — fine at gigabytes, a
+#: reducer OOM or a many-fold shuffle at 100 TB.
+EXACT_MAX_BYTES = 4 * 1024**3
+
+#: Size of each categorical column's P10 frequent-value map.
+TOP_K = 10
 
 #: Concurrent profile jobs in flight (guide §2.6). Enough to overlap the
 #: independent aggregation passes and per-column top-k jobs; small enough
@@ -131,13 +129,12 @@ def percentile_expr(col: str, percentile_method: str = "exact") -> Column:
     return F.percentile_approx(c, pcts)
 
 
-def resolve_auto_percentile_method(
-    df: DataFrame, max_bytes: int = AUTO_PERCENTILE_MAX_BYTES
-) -> str:
-    """Resolve ``percentile_method="auto"`` -> "exact" | "approx" from the
-    Catalyst size estimate of ``df``'s optimized plan (file sizes after
-    pruning — no job is run to decide). RDD-backed in-memory relations have
-    no stats and report the ``spark.sql.defaultSizeInBytes`` sentinel
+def resolve_stat_method(df: DataFrame) -> str:
+    """"exact" | "approx" for profile()'s distinct counts and percentiles,
+    from the Catalyst size estimate of ``df``'s optimized plan (file sizes
+    after pruning — no job is run to decide) against
+    :data:`EXACT_MAX_BYTES`. RDD-backed in-memory relations have no stats
+    and report the ``spark.sql.defaultSizeInBytes`` sentinel
     (Long.MaxValue); those resolve to "exact" — they already fit in cluster
     memory, while the 100 TB inputs this guard exists for are file-backed
     scans with real size stats. Deliberately coarse: the only wrong choice
@@ -148,7 +145,7 @@ def resolve_auto_percentile_method(
     )
     if size >= 1 << 62:  # unknown-size sentinel
         return "exact"
-    return "exact" if size <= max_bytes else "approx"
+    return "exact" if size <= EXACT_MAX_BYTES else "approx"
 
 
 def numeric_stat_exprs(
@@ -240,135 +237,81 @@ def sql_corr(c1: str, c2: str) -> str:
 # The profiler.
 # --------------------------------------------------------------------------
 
-def _top_values_plan(df: DataFrame, col: str, k: int) -> DataFrame:
-    """Build (and cache on ``df``) the P10 top-k plan for one column.
-
-    Caching matters for the recompute-on-miss service pattern: rebuilding
-    the plan per call mints fresh expression IDs, defeating Spark's codegen
-    cache — measured 0.17 s/call vs 0.03 s for a cached plan at sf0.1
-    (analysis + janino, not execution). Same rationale as the
-    ``_gdp_profile_plans`` cache below; plans only, never results."""
-    cache = getattr(df, "_gdp_topk_plans", None)
-    if cache is None:
-        cache = {}
-        try:
-            df._gdp_topk_plans = cache
-        except AttributeError:
-            return _build_top_values_plan(df, col, k)
-    key = (col, k)
-    if key not in cache:
-        cache[key] = _build_top_values_plan(df, col, k)
-    return cache[key]
-
-
-def _build_top_values_plan(df: DataFrame, col: str, k: int) -> DataFrame:
+def _top_values_plan(df: DataFrame, col: str) -> DataFrame:
+    """P10: the top-k frequent values of one categorical column (count-desc,
+    value-asc tiebreak; nulls excluded from the value map)."""
     return (
         df.filter(F.col(col).isNotNull())
         .groupBy(col)
         .agg(F.count(F.lit(1)).alias("cnt"))
         .orderBy(F.col("cnt").desc(), F.col(col).asc())
-        .limit(k)
+        .limit(TOP_K)
     )
 
 
-def top_values(df: DataFrame, col: str, k: int = 10) -> dict[str, int]:
-    """P10: top-k frequent values for one categorical column (count-desc,
-    value-asc tiebreak; nulls excluded from the value map)."""
-    plan = _top_values_plan(df, col, k)
-    rows = plan.collect()
-    _tap_action(plan)
-    return {str(r[col]): r["cnt"] for r in rows}
+def _corr_pairs(numeric: list[str]) -> list[tuple[str, str]]:
+    return [
+        (c1, c2) for i, c1 in enumerate(numeric) for c2 in numeric[i + 1:]
+    ]
 
 
-def profile(
-    df: DataFrame,
-    top_k: int = 10,
-    deterministic: bool = False,
-    distinct_method: str = "exact",
-    percentile_method: str = "auto",
-    include_correlations: bool = True,
-    include_top_values: bool = True,
-    passes: str = "split",
-    auto_percentile_max_bytes: int = AUTO_PERCENTILE_MAX_BYTES,
-) -> dict[str, Any]:
+def _profile_jobs(df: DataFrame, classes: ColumnClasses) -> list[tuple[str, DataFrame]]:
+    """The profile's independent Spark jobs, in merge order: the counts /
+    numeric stats / correlations / percentiles aggregate passes, then one
+    top-k plan per categorical column."""
+    method = resolve_stat_method(df)
+    count_exprs: list[Column] = [F.count(F.lit(1)).alias("__row_count")]
+    for c in df.columns:
+        count_exprs.append(null_count_expr(c))
+        count_exprs.append(distinct_count_expr(c, method))
+    jobs = [("counts", df.agg(*count_exprs))]
+    if classes.numeric:
+        jobs.append((
+            "stats",
+            df.agg(*[
+                e.alias(f"{stat}_{c}")
+                for c in classes.numeric
+                for stat, e in numeric_stat_exprs(c).items()
+            ]),
+        ))
+    pairs = _corr_pairs(classes.numeric)
+    if pairs:
+        jobs.append((
+            "corr",
+            df.agg(*[
+                corr_expr(c1, c2).alias(f"__corr_{c1}-{c2}") for c1, c2 in pairs
+            ]),
+        ))
+    if classes.numeric:
+        # All columns' percentiles in one pass, apart from the codegen'd
+        # stats (see percentile_expr).
+        jobs.append((
+            "pcts",
+            df.agg(*[
+                percentile_expr(c, method).alias(f"__pct_{c}")
+                for c in classes.numeric
+            ]),
+        ))
+    for c in classes.categorical:
+        jobs.append((f"top:{c}", _top_values_plan(df, c)))
+    return jobs
+
+
+def profile(df: DataFrame) -> dict[str, Any]:
     """Full P1-P13 profile as a JSON-shaped dict (numbers stay numeric;
-    string formatting belongs at the API edge — SURVEY.md §4.3.6).
-
-    ``passes``: "split" (default) runs counts / numeric stats / correlations
-    as SEPARATE compact aggregations — whole-stage-codegen compile time is
-    superlinear in plan width, and one fused mega-agg (11 distinct counts +
-    28 correlations + 32 stats) measured ~60 s of janino per call vs ~13 s
-    total when split. "fused" keeps the single-scan plan — the right choice
-    when scan cost dominates compile cost (very wide tables at 100 TB,
-    or a cached input)."""
-    if percentile_method == "auto":
-        # Resolve BEFORE the plan-cache key so the cache is keyed on the
-        # concrete mode actually planned.
-        percentile_method = resolve_auto_percentile_method(
-            df, auto_percentile_max_bytes
-        )
+    string formatting belongs at the API edge — SURVEY.md §4.3.6)."""
     classes = classify_columns(df)
     cols = df.columns
-
-    count_exprs: list[Column] = [F.count(F.lit(1)).alias("__row_count")]
-    for c in cols:
-        count_exprs.append(null_count_expr(c))
-        count_exprs.append(distinct_count_expr(c, distinct_method))
-    stat_exprs: list[Column] = []
-    for c in classes.numeric:
-        for stat, e in numeric_stat_exprs(c, deterministic).items():
-            stat_exprs.append(e.alias(f"{stat}_{c}"))
-    pairs = []
-    corr_exprs: list[Column] = []
-    if include_correlations and len(classes.numeric) >= 2:
-        for i, c1 in enumerate(classes.numeric):
-            for c2 in classes.numeric[i + 1:]:
-                pairs.append((c1, c2))
-                corr_exprs.append(
-                    corr_expr(c1, c2, deterministic).alias(f"__corr_{c1}-{c2}")
-                )
 
     # Plan cache, attached to the input DataFrame: rebuilding aggregate
     # plans mints fresh expression IDs, which defeats Spark's codegen cache
     # and re-pays analysis+compilation (~10 s here vs ~2 s execution at
     # sf0.1). Re-profiling the same dataset is the normal service pattern
-    # (recompute-on-miss — SURVEY.md §3.2), so cache the built plans.
-    cache_key = (deterministic, distinct_method, percentile_method, passes,
-                 include_correlations, tuple(cols))
-    plan_cache = getattr(df, "_gdp_profile_plans", None)
-    if plan_cache is None or plan_cache.get("key") != cache_key:
-        plans: dict[str, DataFrame] = {}
-        if passes == "fused":
-            plans["all"] = df.agg(*(count_exprs + stat_exprs + corr_exprs))
-        else:
-            plans["counts"] = df.agg(*count_exprs)
-            if stat_exprs:
-                plans["stats"] = df.agg(*stat_exprs)
-            if corr_exprs:
-                plans["corr"] = df.agg(*corr_exprs)
-        if classes.numeric and percentile_method != "distributed":
-            # One percentile pass for all columns. r10 split this into one
-            # single-row aggregate per column below a size guard (claiming
-            # the columns' imperative value-map builds then run as
-            # concurrent jobs); the r10 verdict flagged the claim as
-            # driver-contradicted, and the r11 interleaved re-measure
-            # confirms: split+pool vs nosplit+pool is a WALL WASH (medians
-            # 2.39 vs 2.42 s over 4 GC'd rounds) while the split costs
-            # 2.17x rows_scanned and ~4 s extra first-call compile (more
-            # plans). Reverted per verdict #4; the job POOL below is the
-            # part that reproduces (split+pool1 3.12 s median) and stays.
-            plans["pcts"] = df.agg(
-                *[
-                    percentile_expr(c, percentile_method).alias(f"__pct_{c}")
-                    for c in classes.numeric
-                ]
-            )
-        plan_cache = {"key": cache_key, "plans": plans}
-        try:
-            df._gdp_profile_plans = plan_cache
-        except AttributeError:
-            pass
-    plans = plan_cache["plans"]
+    # (recompute-on-miss — SURVEY.md §3.2), so cache the built plans. They
+    # depend on nothing but the DataFrame; plans only, never results.
+    jobs = getattr(df, "_gdp_profile_jobs", None)
+    if jobs is None:
+        jobs = df._gdp_profile_jobs = _profile_jobs(df, classes)
 
     # Run the independent profile jobs CONCURRENTLY (guide §2.6: actions
     # are only sequential because the driver calls them sequentially; a
@@ -378,52 +321,24 @@ def profile(
     # in a FIXED order below, so completion order never affects output;
     # metric harvesting (_tap_action appends to a module-global list) runs
     # after the pool, on this thread.
-    jobs: list[tuple[str, DataFrame]] = list(plans.items())
-    tv_rows: dict[str, list] = {}
-    if include_top_values:
-        for c in classes.categorical:
-            jobs.append((f"top:{c}", _top_values_plan(df, c, top_k)))
-    if len(jobs) > 1:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(
-            max_workers=min(PROFILE_JOB_POOL, len(jobs))
-        ) as pool:
-            futs = [(name, pool.submit(plan.collect)) for name, plan in jobs]
-            collected = {name: f.result() for name, f in futs}
-    else:
-        collected = {name: plan.collect() for name, plan in jobs}
-    for name, plan in jobs:
+    with ThreadPoolExecutor(max_workers=min(PROFILE_JOB_POOL, len(jobs))) as pool:
+        futs = [(name, pool.submit(plan.collect)) for name, plan in jobs]
+        collected = [(name, f.result()) for name, f in futs]
+    for _name, plan in jobs:
         _tap_action(plan)
 
-    row = {}
-    for name, _plan in jobs:
+    row: dict[str, Any] = {}
+    tv_rows: dict[str, list] = {}
+    for name, rows in collected:
         if name.startswith("top:"):
-            tv_rows[name[4:]] = collected[name]
+            tv_rows[name[4:]] = rows
         else:
-            row.update(collected[name][0].asDict())
-
-    # Exact percentiles (imperative aggregates — kept out of the codegen'd
-    # stats pass; see percentile_expr docstring). Three modes: "exact"
-    # (single-buffer, reference semantics), "approx" (GK sketch),
-    # "distributed" (range-partitioned order statistics — the 100 TB path
-    # that is still bit-exact; operators.percentiles).
-    if classes.numeric and percentile_method == "distributed":
-        from g_data_pipeline_spark.operators.percentiles import (
-            exact_percentiles_distributed,
-        )
-
-        for c in classes.numeric:
-            got = exact_percentiles_distributed(df, c, [0.25, 0.5, 0.75])
-            row[f"percentile_25_{c}"] = got[0.25]
-            row[f"median_{c}"] = got[0.5]
-            row[f"percentile_75_{c}"] = got[0.75]
-    elif classes.numeric:
-        for c in classes.numeric:
-            p25, med, p75 = row[f"__pct_{c}"] or (None, None, None)
-            row[f"percentile_25_{c}"] = p25
-            row[f"median_{c}"] = med
-            row[f"percentile_75_{c}"] = p75
+            row.update(rows[0].asDict())
+    for c in classes.numeric:
+        p25, med, p75 = row[f"__pct_{c}"] or (None, None, None)
+        row[f"percentile_25_{c}"] = p25
+        row[f"median_{c}"] = med
+        row[f"percentile_75_{c}"] = p75
 
     dtype_by_col = {f_.name: f_.dataType.simpleString() for f_ in df.schema.fields}
     column_statistics = []
@@ -434,13 +349,11 @@ def profile(
             "null_count": row[f"null_count_{c}"],
             "unique_count": row[f"unique_count_{c}"],
         }
-        if c in set(classes.numeric):
+        if c in classes.numeric:
             for stat in NUMERIC_STATS:
                 stats[stat] = row[f"{stat}_{c}"]
-        if include_top_values and c in set(classes.categorical):
-            stats["top_values"] = {
-                str(r[c]): r["cnt"] for r in tv_rows[c]
-            }
+        if c in tv_rows:
+            stats["top_values"] = {str(r[c]): r["cnt"] for r in tv_rows[c]}
         column_statistics.append(stats)
 
     result: dict[str, Any] = {
@@ -458,6 +371,7 @@ def profile(
         },
         "column_statistics": column_statistics,
     }
+    pairs = _corr_pairs(classes.numeric)
     if pairs:
         result["correlations"] = {
             f"{c1}-{c2}": row[f"__corr_{c1}-{c2}"] for c1, c2 in pairs

@@ -13,11 +13,11 @@ parsing" but no such code exists (SURVEY.md §1.2 caveat — README.md:17,
 the documented intent explicitly and testably:
 
 - For every string column, ONE aggregation pass computes the fraction of
-  non-null values parseable under each candidate format (dates, timestamps,
+  non-blank values parseable under each candidate format (dates, timestamps,
   and human-formatted numbers like "1,200" / " 950 "). No driver-side loops
   over data, no per-column scans — the whole decision is a single job over
   all columns at once, so it scales with one pass regardless of column count.
-- A column is coerced when >= ``threshold`` (default 0.95) of its non-null
+- A column is coerced when >= ``COERCE_THRESHOLD`` (0.95) of its non-blank
   values parse; winning format is the first candidate (ordered by
   specificity) that clears the bar.
 """
@@ -43,39 +43,37 @@ DATE_FORMATS = (
     "M/d/yyyy",
     "dd-MM-yyyy",
 )
+# Coercion candidates as (kind, format), most-specific first.
+_CANDIDATES = (
+    *(("timestamp", fmt) for fmt in TIMESTAMP_FORMATS),
+    *(("date", fmt) for fmt in DATE_FORMATS),
+    ("number", None),
+)
 # Human-formatted numerics: optional thousands separators and whitespace.
 _NUMBER_CLEAN = r"[,\s]"
+# Share of a string column's non-blank values that must parse to coerce it.
+COERCE_THRESHOLD = 0.95
 
 
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    sampling_ratio: float | None = None,
-    header: bool = True,
-) -> DataFrame:
-    """S1: CSV scan with schema inference.
+def read_csv(spark: SparkSession, path: str) -> DataFrame:
+    """S1: CSV scan (header row) with full-scan schema inference — the
+    reference infers from the first 100 rows (processor.rs:255-258)."""
+    return spark.read.option("header", True).option("inferSchema", True).csv(path)
 
-    The reference infers from the first 100 rows (processor.rs:255-258);
-    Spark's equivalent knob is ``samplingRatio`` — full-scan inference by
-    default, sampled for huge inputs.
-    """
-    reader = spark.read.option("header", header).option("inferSchema", True)
-    if sampling_ratio is not None:
-        reader = reader.option("samplingRatio", sampling_ratio)
-    return reader.csv(path)
+
+def _non_blank(col: str) -> Column:
+    return F.when(F.trim(F.col(col)) != "", F.col(col))
 
 
 def _parse_expr(col: str, kind: str, fmt: str | None) -> Column:
-    c = F.col(col)
-    if kind == "timestamp":
-        return F.try_to_timestamp(c, F.lit(fmt))
-    if kind == "date":
-        # try_to_timestamp with a date pattern, cast to date afterwards —
-        # avoids exceptions on unparseable rows (ANSI-safe).
-        return F.try_to_timestamp(c, F.lit(fmt)).cast("date")
+    """``col`` parsed as one candidate kind/format; NULL for blank strings
+    (missing values, not parse failures) and for unparseable values (the
+    ``try_`` functions never raise, so this is ANSI-safe)."""
+    base = _non_blank(col)
     if kind == "number":
-        return F.regexp_replace(c, _NUMBER_CLEAN, "").try_cast("double")
-    raise ValueError(kind)
+        return F.regexp_replace(base, _NUMBER_CLEAN, "").try_cast("double")
+    parsed = F.try_to_timestamp(base, F.lit(fmt))
+    return parsed.cast("date") if kind == "date" else parsed
 
 
 @dataclass(frozen=True)
@@ -86,9 +84,7 @@ class CoercionDecision:
     parse_rate: float
 
 
-def plan_coercions(
-    df: DataFrame, threshold: float = 0.95, candidates_limit: int = 64
-) -> list[CoercionDecision]:
+def plan_coercions(df: DataFrame) -> list[CoercionDecision]:
     """One aggregation pass over all string columns × candidate formats;
     returns the winning coercion per column (if any)."""
     string_cols = [
@@ -97,64 +93,35 @@ def plan_coercions(
     if not string_cols:
         return []
 
-    candidates: list[tuple[str, str, str | None]] = []
-    for col in string_cols:
-        for fmt in TIMESTAMP_FORMATS:
-            candidates.append((col, "timestamp", fmt))
-        for fmt in DATE_FORMATS:
-            candidates.append((col, "date", fmt))
-        candidates.append((col, "number", None))
-
     exprs: list[Column] = []
-    for col in string_cols:
-        exprs.append(F.count(col).alias(f"__n::{col}"))
-    for i, (col, kind, fmt) in enumerate(candidates):
-        # NULLIF('' ) — empty strings count as missing, not parse failures.
-        base = F.when(F.trim(F.col(col)) != "", F.col(col))
-        parsed = _parse_expr(col, kind, fmt) if kind != "number" else (
-            F.regexp_replace(base, _NUMBER_CLEAN, "").try_cast("double")
-        )
-        if kind != "number":
-            parsed = F.when(base.isNotNull(), parsed)
-        exprs.append(F.count(parsed).alias(f"__p::{i}"))
-        exprs.append(F.count(base).alias(f"__b::{i}"))
+    for ci, col in enumerate(string_cols):
+        exprs.append(F.count(_non_blank(col)).alias(f"__b::{ci}"))
+        for i, (kind, fmt) in enumerate(_CANDIDATES):
+            exprs.append(F.count(_parse_expr(col, kind, fmt)).alias(f"__p::{ci}::{i}"))
 
     row = df.agg(*exprs).collect()[0].asDict()
 
     decisions: list[CoercionDecision] = []
-    for col in string_cols:
-        best: CoercionDecision | None = None
-        for i, (c, kind, fmt) in enumerate(candidates):
-            if c != col:
-                continue
-            non_blank = row[f"__b::{i}"]
-            if non_blank == 0:
-                continue
-            rate = row[f"__p::{i}"] / non_blank
-            if rate >= threshold:
-                best = CoercionDecision(col, kind, fmt, rate)
-                break  # candidates are ordered most-specific first
-        if best is not None:
-            decisions.append(best)
+    for ci, col in enumerate(string_cols):
+        non_blank = row[f"__b::{ci}"]
+        if non_blank == 0:
+            continue
+        # candidates are ordered most-specific first
+        for i, (kind, fmt) in enumerate(_CANDIDATES):
+            rate = row[f"__p::{ci}::{i}"] / non_blank
+            if rate >= COERCE_THRESHOLD:
+                decisions.append(CoercionDecision(col, kind, fmt, rate))
+                break
     return decisions
 
 
-def coerce_types(
-    df: DataFrame, threshold: float = 0.95
-) -> tuple[DataFrame, list[CoercionDecision]]:
+def coerce_types(df: DataFrame) -> tuple[DataFrame, list[CoercionDecision]]:
     """Apply the planned coercions; blank strings become NULL in coerced
     columns (they are missing values, not parse failures)."""
-    decisions = plan_coercions(df, threshold)
-    out = df
-    for d in decisions:
-        base = F.when(F.trim(F.col(d.column)) != "", F.col(d.column))
-        if d.kind == "number":
-            new = F.regexp_replace(base, _NUMBER_CLEAN, "").try_cast("double")
-        elif d.kind == "timestamp":
-            new = F.try_to_timestamp(base, F.lit(d.fmt))
-        else:
-            new = F.try_to_timestamp(base, F.lit(d.fmt)).cast("date")
-        out = out.withColumn(d.column, new)
+    decisions = plan_coercions(df)
+    out = df.withColumns(
+        {d.column: _parse_expr(d.column, d.kind, d.fmt) for d in decisions}
+    )
     return out, decisions
 
 
@@ -171,27 +138,12 @@ def normalize_column_names(df: DataFrame) -> DataFrame:
 
 
 def land_csv(
-    spark: SparkSession,
-    src: str,
-    dest: str,
-    threshold: float = 0.95,
-    normalize_names: bool = True,
-    partition_by: list[str] | None = None,
+    spark: SparkSession, src: str, dest: str
 ) -> tuple[DataFrame, list[CoercionDecision]]:
-    """S1+S3: CSV -> typed Parquet, the ingest boundary of the engine.
-
-    ``partition_by`` enables hive-style partition pruning for downstream
-    queries (choose low-cardinality columns; at 100 TB this is what turns
-    date-range queries into partial scans).
-    """
-    df = read_csv(spark, src)
-    if normalize_names:
-        df = normalize_column_names(df)
-    df, decisions = coerce_types(df, threshold)
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(dest)
+    """S1+S3: CSV -> typed Parquet, the ingest boundary of the engine:
+    read, normalize header names, coerce, write, re-open the Parquet."""
+    df, decisions = coerce_types(normalize_column_names(read_csv(spark, src)))
+    df.write.mode("overwrite").parquet(dest)
     return spark.read.parquet(dest), decisions
 
 

@@ -113,6 +113,26 @@ def test_conversation_query_route(app, job_id):
     assert status == 200 and "sum_age" in out2["data"][0]
 
 
+def test_query_rows_with_dates_serialize_as_iso(app):
+    status, out = call(
+        app,
+        "POST",
+        "/upload",
+        body=b"d,t,x\n2024-01-02,2024-01-02 03:04:05,1\n2024-03-04,2024-03-04 05:06:07,2\n",
+        headers={"X-Filename": "dates.csv"},
+    )
+    assert status == 200
+    req = json.dumps(
+        {"job_id": out["job_id"], "ir": {"intent": "describe", "columns": []}}
+    ).encode()
+    status, out = call(app, "POST", "/api/conversation/query", body=req)
+    assert status == 200
+    assert sorted((r["d"], r["t"], r["x"]) for r in out["data"]) == [
+        ("2024-01-02", "2024-01-02T03:04:05", 1),
+        ("2024-03-04", "2024-03-04T05:06:07", 2),
+    ]
+
+
 def test_query_missing_job_id_400(app):
     status, out = call(app, "POST", "/api/conversation/query", body=b"{}")
     assert status == 400

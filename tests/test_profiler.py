@@ -82,15 +82,24 @@ def test_correlations_match_pandas(people, people_pd):
 
 
 def test_deterministic_mode_agrees_with_default(people):
-    fast = profile(people, include_top_values=False)
-    det = profile(people, deterministic=True, include_top_values=False)
+    """profile()'s built-in mean/stddev/corr agree with the exact-decimal
+    deterministic builders the oracle-gated queries use."""
+    from g_data_pipeline_spark.profiler import corr_expr, numeric_stat_exprs
+
+    fast = profile(people)
+    exprs = [
+        e.alias(f"{stat}_{col}")
+        for col in ("age", "score")
+        for stat, e in numeric_stat_exprs(col, deterministic=True).items()
+        if stat in ("mean", "std_dev")
+    ]
+    exprs.append(corr_expr("age", "score", deterministic=True).alias("corr"))
+    det = people.agg(*exprs).collect()[0]
     fb = {s["name"]: s for s in fast["column_statistics"]}
-    db = {s["name"]: s for s in det["column_statistics"]}
     for col in ("age", "score"):
         for stat in ("mean", "std_dev"):
-            assert fb[col][stat] == pytest.approx(db[col][stat], rel=1e-6)
-    for k, v in fast["correlations"].items():
-        assert det["correlations"][k] == pytest.approx(v, rel=1e-6)
+            assert fb[col][stat] == pytest.approx(det[f"{stat}_{col}"], rel=1e-6)
+    assert fast["correlations"]["age-score"] == pytest.approx(det["corr"], rel=1e-6)
 
 
 def test_top_values_categorical_only(people, people_pd):
@@ -104,53 +113,55 @@ def test_top_values_categorical_only(people, people_pd):
     assert len(by_name["comments"]["top_values"]) == 10
 
 
-def test_approx_modes_run_and_are_close(people, people_pd):
+def test_approx_modes_run_and_are_close(spark, people_pd, monkeypatch):
+    """Above the size bound profile() uses HLL distinct counts and GK
+    percentiles; both must track the exact answers."""
+    from g_data_pipeline_spark import profiler
+
+    monkeypatch.setattr(profiler, "EXACT_MAX_BYTES", 1)
+    # a fresh frame (the module fixture carries cached exact plans)
     p = profile(
-        people,
-        distinct_method="approx",
-        percentile_method="approx",
-        include_top_values=False,
+        spark.read.option("header", True).option("inferSchema", True).csv(FIXTURE)
     )
     by_name = {s["name"]: s for s in p["column_statistics"]}
     vals = people_pd["score"].dropna().to_numpy(dtype=float)
     assert by_name["score"]["median"] == pytest.approx(np.percentile(vals, 50), rel=0.05)
-    assert by_name["score"]["unique_count"] == pytest.approx(
-        people_pd["score"].nunique(), rel=0.1
-    )
+    for col in ("age", "score", "province", "comments"):
+        assert by_name[col]["unique_count"] == pytest.approx(
+            people_pd[col].nunique(), rel=0.1
+        )
 
 
-def test_percentile_auto_switch_both_ways(spark, tmp_path):
-    """percentile_method="auto" (the default) must resolve exact below the
-    size threshold and approx above it — observable end-to-end: exact p50
+def test_percentile_auto_switch_both_ways(spark, tmp_path, monkeypatch):
+    """The size-derived method must resolve exact at or under
+    EXACT_MAX_BYTES and approx above it — observable end-to-end: exact p50
     of [1,2,3,4] is the interpolated 2.5, which the GK sketch can never
     return (it reports an actual element)."""
-    from g_data_pipeline_spark.profiler import resolve_auto_percentile_method
+    from g_data_pipeline_spark import profiler
 
     # file-backed scan: real size stats drive the choice
     path = str(tmp_path / "vals")
     spark.createDataFrame([(float(i),) for i in (1, 2, 3, 4)], ["v"]).write.parquet(path)
     df = spark.read.parquet(path)
-    assert resolve_auto_percentile_method(df) == "exact"  # a few hundred bytes
-    assert resolve_auto_percentile_method(df, max_bytes=1) == "approx"
-
-    exact = profile(df, include_top_values=False, include_correlations=False)
+    assert profiler.resolve_stat_method(df) == "exact"  # a few hundred bytes
+    exact = profile(df)
     assert exact["column_statistics"][0]["median"] == 2.5  # exact path ran
+    assert exact["column_statistics"][0]["unique_count"] == 4
 
-    approx = profile(
-        df,
-        include_top_values=False,
-        include_correlations=False,
-        auto_percentile_max_bytes=1,
-    )
+    monkeypatch.setattr(profiler, "EXACT_MAX_BYTES", 1)
+    df = spark.read.parquet(path)  # fresh frame: no cached plans
+    assert profiler.resolve_stat_method(df) == "approx"
+    approx = profile(df)
     assert approx["column_statistics"][0]["median"] in (2.0, 3.0)  # sketch ran
+    assert approx["column_statistics"][0]["unique_count"] == pytest.approx(4, abs=1)
 
     # RDD-backed in-memory relation: unknown-size sentinel -> exact
     local = spark.createDataFrame([(1.0,), (2.0,)], ["v"])
-    assert resolve_auto_percentile_method(local, max_bytes=1) == "exact"
+    assert profiler.resolve_stat_method(local) == "exact"
 
 
 def test_format_insights_presentation_layer(people):
-    p = profile(people, include_top_values=False)
+    p = profile(people)
     out = format_insights(p)
     by_name = {s["name"]: s for s in out["column_statistics"]}
     assert isinstance(by_name["age"]["mean"], str)  # "{:.2f}" at the edge

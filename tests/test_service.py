@@ -44,10 +44,23 @@ def test_job_lifecycle_and_insights(svc, job_id):
     assert "mean" in stats["age"]
 
 
-def test_insights_recompute_on_miss(svc, job_id):
+def test_insights_recompute_on_miss(svc, job_id, monkeypatch):
+    """A cache miss re-profiles the landed dataset: no CSV re-landing, and
+    the job stays COMPLETED throughout."""
+    import g_data_pipeline_spark.service as service_mod
+
+    original = svc.get_insights(job_id)
+
+    def no_relanding(*args, **kwargs):
+        raise AssertionError("recompute-on-miss must not re-land the CSV")
+
+    monkeypatch.setattr(service_mod, "land_csv", no_relanding)
     svc.insights_cache.pop(job_id)
     insights = svc.get_insights(job_id)
+    assert insights == original
     assert insights["data_summary"]["row_count"] == 200
+    assert svc.jobs[job_id].status == JobStatus.COMPLETED
+    assert svc.insights_cache.get(job_id) is not None  # re-cached
 
 
 def test_insights_unknown_and_pending(svc):
