@@ -8,7 +8,10 @@ Route parity with ``/root/reference/src/main.rs:130-148``:
     GET  /insights/{job_id}         404 unknown / 202 {"status": ...} while
                                     pending / 200 insights JSON
     POST /api/conversation/query    {"job_id", "query" | "ir",
-                                     "conversation_id"?} -> query response
+                                     "conversation_id"?, "max_rows"?} ->
+                                    query response; 404 unknown job / 409
+                                    job not completed / 400 max_rows
+                                    outside 0..MAX_RESULT_ROWS
     GET  /debug/files               object-store key listing
 
 The app is a plain WSGI callable over :class:`DataPipelineService` — any
@@ -39,7 +42,8 @@ from email.policy import default as default_email_policy
 from typing import TYPE_CHECKING, Any, Callable
 from urllib.parse import parse_qs
 
-from g_data_pipeline_spark.service import DataPipelineService
+from g_data_pipeline_spark.jobstore import JobStatus
+from g_data_pipeline_spark.service import MAX_RESULT_ROWS, DataPipelineService
 
 if TYPE_CHECKING:  # import cycle guard: worker imports service only
     from g_data_pipeline_spark.worker import JobWorker
@@ -156,12 +160,24 @@ class PipelineApp:
         req = json.loads(self._read_body(environ) or b"{}")
         if "job_id" not in req:
             raise ValueError("job_id is required")
+        max_rows = int(req.get("max_rows", MAX_RESULT_ROWS))
+        if not 0 <= max_rows <= MAX_RESULT_ROWS:
+            raise ValueError(f"max_rows must be in 0..{MAX_RESULT_ROWS}")
+        job_id = req["job_id"]
+        job = self.service.jobs.get(job_id)
+        if job is None:
+            return "404 Not Found", {"error": f"unknown job {job_id}"}
+        if job.status != JobStatus.COMPLETED:
+            return "409 Conflict", {
+                "error": f"job {job_id} has no dataset yet",
+                "status": job.status.value,
+            }
         out = self.service.query(
-            req["job_id"],
+            job_id,
             query_text=req.get("query"),
             ir=req.get("ir"),
             conversation_id=req.get("conversation_id"),
-            max_rows=int(req.get("max_rows", 1000)),
+            max_rows=max_rows,
         )
         return "200 OK", out
 

@@ -222,56 +222,23 @@ def phash_neardup_stream(
     timeout_s: int = 180,
     sink_name: str | None = None,
 ):
-    """Exactly-once streaming twin (the neardup_paragraph_stream shape):
+    """Exactly-once streaming twin via ``directory_cut_stream``:
     each micro-batch labels against the archive AS OF the version
     preceding its own delta commit (run-marker as-of read), then commits
     labels + the survivors' band-bucket delta through the txn manifest
     protocol — replays no-op on their run_ids and the shared core labels
     replay-stably."""
-    import hashlib
-
-    from g_data_pipeline_spark.sources import txn
-
-    if sink_name is None:
-        sink_name = hashlib.sha256(checkpoint_dir.encode()).hexdigest()[:12]
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        delta_rid = f"{sink_name}-dir-batch-{int(batch_id)}"
-        out_rid = f"{sink_name}-out-batch-{int(batch_id)}"
-        read_version = txn.version_before_run(
-            spark, directory_table, delta_rid
-        )
-        if read_version is None:
-            directory = spark.createDataFrame([], DIRECTORY_SCHEMA)
-        else:
-            directory = txn.read_committed(
-                spark, directory_table, version=read_version
-            )
-        labeled, delta = incremental_phash_neardup(
-            batch_df, directory, id_col, content_col, codec, bands
-        )
-        labeled = labeled.localCheckpoint(eager=True)
-        delta = delta.localCheckpoint(eager=True)
-        txn.commit_write(
-            spark, delta, directory_table, run_id=delta_rid, mode="append"
-        )
-        txn.commit_write(
-            spark, labeled, out_table, run_id=out_rid, mode="append"
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    from g_data_pipeline_spark.streaming.pipelines import (
+        directory_cut_stream,
     )
-    try:
-        finished = q.awaitTermination(timeout_s)
-        if not finished:
-            raise TimeoutError(
-                f"phash near-dup stream did not drain within {timeout_s}s"
-            )
-    finally:
-        q.stop()
-    return q
+
+    return directory_cut_stream(
+        stream, directory_table, out_table, checkpoint_dir,
+        lambda batch_df, directory: incremental_phash_neardup(
+            batch_df, directory, id_col, content_col, codec, bands
+        ),
+        lambda batch_df: batch_df.sparkSession.createDataFrame(
+            [], DIRECTORY_SCHEMA
+        ),
+        "phash near-dup stream", timeout_s, sink_name,
+    )

@@ -228,56 +228,24 @@ def semantic_dedup_stream(
     timeout_s: int = 180,
     sink_name: str | None = None,
 ):
-    """Exactly-once streaming twin (the minhash_dedup_stream shape): each
+    """Exactly-once streaming twin via ``directory_cut_stream``: each
     micro-batch labels against the archive AS OF the version preceding
     its own delta commit (txn run-marker index), then commits labels and
     the survivor delta through the manifest protocol — replays no-op on
     their run_ids, and the operator's labeling is additionally
     replay-stable by construction. The codebook is FROZEN for the life
     of the stream (pass the same centroids table every run)."""
-    import hashlib
-
-    from g_data_pipeline_spark.sources import txn
-
-    if sink_name is None:
-        sink_name = hashlib.sha256(checkpoint_dir.encode()).hexdigest()[:12]
-    empty_schema = f"cell long, vec_id long, {vec_col} array<float>"
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        delta_rid = f"{sink_name}-arch-batch-{int(batch_id)}"
-        out_rid = f"{sink_name}-out-batch-{int(batch_id)}"
-        read_version = txn.version_before_run(spark, archive_table, delta_rid)
-        if read_version is None:
-            archive = spark.createDataFrame([], empty_schema)
-        else:
-            archive = txn.read_committed(
-                spark, archive_table, version=read_version
-            )
-        labeled, delta = incremental_semantic_dedup(
-            batch_df, archive, centroids, threshold, n_probe, id_col, vec_col
-        )
-        labeled = labeled.localCheckpoint(eager=True)
-        delta = delta.localCheckpoint(eager=True)
-        txn.commit_write(
-            spark, delta, archive_table, run_id=delta_rid, mode="append"
-        )
-        txn.commit_write(
-            spark, labeled, out_table, run_id=out_rid, mode="append"
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    from g_data_pipeline_spark.streaming.pipelines import (
+        directory_cut_stream,
     )
-    try:
-        finished = q.awaitTermination(timeout_s)
-        if not finished:
-            raise TimeoutError(
-                f"semantic dedup stream did not drain within {timeout_s}s"
-            )
-    finally:
-        q.stop()
-    return apply_batch
+
+    return directory_cut_stream(
+        stream, archive_table, out_table, checkpoint_dir,
+        lambda batch_df, archive: incremental_semantic_dedup(
+            batch_df, archive, centroids, threshold, n_probe, id_col, vec_col
+        ),
+        lambda batch_df: batch_df.sparkSession.createDataFrame(
+            [], f"cell long, vec_id long, {vec_col} array<float>"
+        ),
+        "semantic dedup stream", timeout_s, sink_name, delta_tag="arch",
+    )

@@ -456,11 +456,16 @@ def streaming_index_delta_sink(
     import json
     import os
 
+    from g_data_pipeline_spark.streaming.pipelines import (
+        overwrite_batch_partition,
+        run_foreach_batch,
+    )
+
     with open(os.path.join(path, "meta.json")) as fh:
         meta = json.load(fh)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
+        overwrite_batch_partition(
             batch_df.select(
                 F.col(id_col).alias("id"),
                 _nearest_centroid_expr(vec_col, meta["centroids"]).alias(
@@ -469,39 +474,22 @@ def streaming_index_delta_sink(
                 pq_codes_expr(vec_col, meta["books"], meta["dim"]).alias(
                     "codes"
                 ),
-            )
-            .withColumn("__batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id", "cell")
-            .parquet(os.path.join(path, "delta_codes"))
+            ),
+            batch_id,
+            os.path.join(path, "delta_codes"),
+            "cell",
         )
-        (
+        overwrite_batch_partition(
             batch_df.select(
                 F.col(id_col).alias("id"), F.col(vec_col).alias("vector")
-            )
-            .withColumn("__batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id")
-            .parquet(os.path.join(path, "delta_vectors"))
+            ),
+            batch_id,
+            os.path.join(path, "delta_vectors"),
         )
 
-    q = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_foreach_batch(
+        stream, write_batch, checkpoint_dir, "index delta sink", timeout_s
     )
-    try:
-        finished = q.awaitTermination(timeout_s)
-        if not finished:
-            raise TimeoutError(
-                f"index delta sink did not drain within {timeout_s}s"
-            )
-    finally:
-        q.stop()
-    return write_batch
 
 
 def compact_index_delta(spark, path: str) -> int:

@@ -182,7 +182,7 @@ def crawl_curation_tick(
       -> optional directory maintenance (compaction/retention/marker GC)
 
     Exactly-once: every directory is read AS OF the version preceding
-    this dump's own delta (txn.version_before_run — a replay sees what
+    this dump's own delta (txn.read_as_of_run — a replay sees what
     the first attempt saw), every commit no-ops on its run_id, and a
     fully-committed dump short-circuits on the output run_id. Replay
     safety holds within the retention horizon — vacuuming a dump's
@@ -229,11 +229,9 @@ def crawl_curation_tick(
     )
 
     # exact vs archive — fingerprints of every previously KEPT doc
-    v = txn.version_before_run(spark, fp_table, f"{rid}-fp")
-    fp_dir = (
-        txn.read_committed(spark, fp_table, v)
-        if v is not None
-        else spark.createDataFrame([], "fingerprint string")
+    fp_dir = txn.read_as_of_run(
+        spark, fp_table, f"{rid}-fp",
+        lambda: spark.createDataFrame([], "fingerprint string"),
     )
     batch_fp = curated.withColumn("__fp", fingerprint_md5(text_col))
     fresh = batch_fp.join(
@@ -255,11 +253,11 @@ def crawl_curation_tick(
     fresh = fresh.localCheckpoint(eager=True)
 
     # substring-level cut vs the window-hash directory
-    v = txn.version_before_run(spark, sub_table, f"{rid}-sub")
-    sub_dir = (
-        txn.read_committed(spark, sub_table, v)
-        if v is not None
-        else spark.createDataFrame([], "h string, owner_id long, owner_pos int")
+    sub_dir = txn.read_as_of_run(
+        spark, sub_table, f"{rid}-sub",
+        lambda: spark.createDataFrame(
+            [], "h string, owner_id long, owner_pos int"
+        ),
     )
     cleaned, sub_delta = incremental_substring_dedup(
         fresh, sub_dir, id_col, text_col, window_tokens
@@ -272,14 +270,12 @@ def crawl_curation_tick(
     ).localCheckpoint(eager=True)
 
     # near-dup vs the band archive, on the CLEANED text
-    v = txn.version_before_run(spark, band_table, f"{rid}-band")
-    band_dir = (
-        txn.read_committed(spark, band_table, v)
-        if v is not None
-        else minhash_band_directory(
+    band_dir = txn.read_as_of_run(
+        spark, band_table, f"{rid}-band",
+        lambda: minhash_band_directory(
             enriched.limit(0), "id", "dedup_text",
             num_hashes=num_hashes, bands=bands,
-        )
+        ),
     )
     labeled, band_delta = incremental_minhash_dedup(
         enriched, band_dir, "id", "dedup_text",

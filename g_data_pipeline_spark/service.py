@@ -23,8 +23,10 @@ reference's dual-uuid quirk, SURVEY.md §3.1).
 from __future__ import annotations
 
 import json
+import threading
 import time
 import uuid
+from collections import OrderedDict
 from collections.abc import Callable
 from dataclasses import dataclass, field
 from typing import Any
@@ -38,7 +40,7 @@ from g_data_pipeline_spark.llm import LLMClient
 from g_data_pipeline_spark.nl import parse_llm_response, rule_based_translate
 from g_data_pipeline_spark.plans import compile_query
 from g_data_pipeline_spark.profiler import classify_columns, format_insights, profile
-from g_data_pipeline_spark.sources import dataset_metadata, land_csv
+from g_data_pipeline_spark.sources import land_csv
 from g_data_pipeline_spark.storage import LocalObjectStore, ObjectStore, TTLCache
 
 # Hard ceiling on rows fetched to the driver per conversation query. The
@@ -46,6 +48,10 @@ from g_data_pipeline_spark.storage import LocalObjectStore, ObjectStore, TTLCach
 # 100 TB that OOMs the driver; results beyond the cap are flagged truncated
 # so callers paginate or export instead.
 MAX_RESULT_ROWS = 1000
+
+# Conversation contexts kept in memory; past the cap the least recently
+# used one is evicted (every query without a conversation_id opens one).
+MAX_CONVERSATIONS = 10_000
 
 
 # Job/JobStatus (and the store seam) live in jobstore.py — re-exported
@@ -99,7 +105,10 @@ class DataPipelineService:
         self.insights_cache = insights_cache or TTLCache(
             ttl_s=insights_ttl_s, clock=clock
         )
-        self.conversations: dict[str, ConversationContext] = {}
+        self.conversations: OrderedDict[str, ConversationContext] = (
+            OrderedDict()
+        )
+        self._conversations_lock = threading.Lock()
         self._datasets: dict[str, DataFrame] = {}
 
     # ---- §3.1 upload -> profile job -------------------------------------
@@ -186,6 +195,24 @@ class DataPipelineService:
             query_text, df.columns, classes.numeric, history=history
         )
 
+    def _conversation(
+        self, conversation_id: str | None, job_id: str
+    ) -> ConversationContext:
+        """The context for ``conversation_id`` (a new one when unknown or
+        None), marked most recently used; evicts the least recently used
+        contexts beyond ``MAX_CONVERSATIONS``."""
+        with self._conversations_lock:
+            ctx = self.conversations.get(conversation_id)
+            if ctx is None:
+                ctx = ConversationContext(
+                    id=conversation_id or str(uuid.uuid4()), job_id=job_id
+                )
+                self.conversations[ctx.id] = ctx
+            self.conversations.move_to_end(ctx.id)
+            while len(self.conversations) > MAX_CONVERSATIONS:
+                self.conversations.popitem(last=False)
+            return ctx
+
     def query(
         self,
         job_id: str,
@@ -195,12 +222,7 @@ class DataPipelineService:
         max_rows: int = MAX_RESULT_ROWS,
     ) -> dict[str, Any]:
         df = self.dataset(job_id)
-        if conversation_id is None or conversation_id not in self.conversations:
-            conversation_id = conversation_id or str(uuid.uuid4())
-            self.conversations[conversation_id] = ConversationContext(
-                id=conversation_id, job_id=job_id
-            )
-        ctx = self.conversations[conversation_id]
+        ctx = self._conversation(conversation_id, job_id)
         history = [t.query for t in ctx.history]
 
         if ir is not None:
@@ -228,7 +250,7 @@ class DataPipelineService:
             else _prose_summary(sq, rows)
         )
         response: dict[str, Any] = {
-            "conversation_id": conversation_id,
+            "conversation_id": ctx.id,
             "data": rows,
             "response": prose,
             "truncated": truncated,

@@ -389,6 +389,19 @@ def version_before_run(
     return latest_version(spark, table)
 
 
+def read_as_of_run(
+    spark: SparkSession, table: str, run_id: str, empty
+) -> DataFrame:
+    """``table`` as a (re)play of ``run_id`` must see it: the snapshot at
+    :func:`version_before_run`, or ``empty()`` — the caller's empty frame
+    with the table's schema — when the table held nothing before the
+    run."""
+    version = version_before_run(spark, table, run_id)
+    if version is None:
+        return empty()
+    return read_committed(spark, table, version=version)
+
+
 def read_committed(
     spark: SparkSession, table: str, version: int | None = None
 ) -> DataFrame:

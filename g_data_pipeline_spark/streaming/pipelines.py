@@ -12,9 +12,25 @@ Late data: every aggregation takes a ``watermark`` — events later than it
 are dropped and their windows finalized; state size is bounded by
 (watermark horizon / slide) x key cardinality. At 100 TB/day scale the same
 code runs against Kafka by swapping the source; nothing else changes.
+
+Exactly-once sinks share one micro-batch runner. :func:`drain_available_now`
+runs a writer over all currently-available input (Trigger.AvailableNow) and
+always stops it; :func:`run_foreach_batch` wires a per-batch function to it
+and returns that function, so tests replay an epoch by calling it with the
+same ``batch_id``. Idempotence comes in two forms: per-batch ``__batch_id``
+partitions overwritten dynamically (:func:`overwrite_batch_partition`), or
+run-id commits through the ``sources/txn.py`` manifest protocol, namespaced
+by :func:`default_sink_name`. The incremental dedup operators all run the
+as-of directory-cut protocol of :func:`directory_cut_stream`: read the
+directory as of the version before the batch's own delta
+(``txn.read_as_of_run``), so a replay sees what the first attempt saw; then
+commit the delta, then the output, each no-op on its run id.
 """
 
 from __future__ import annotations
+
+import hashlib
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -163,6 +179,123 @@ def running_user_totals_stream(stream: DataFrame) -> DataFrame:
     )
 
 
+def drain_available_now(writer, what: str, timeout_s: int) -> None:
+    """Run ``writer`` (a ``DataStreamWriter``) over all currently-available
+    input (Trigger.AvailableNow) and stop it. Raises ``TimeoutError`` when
+    the input is not drained within ``timeout_s`` — callers never see a
+    partially-processed sink."""
+    q = writer.trigger(availableNow=True).start()
+    try:
+        if not q.awaitTermination(timeout_s):
+            raise TimeoutError(f"{what} did not drain within {timeout_s}s")
+    finally:
+        q.stop()
+
+
+def run_foreach_batch(
+    stream: DataFrame, apply_batch, checkpoint_dir: str, what: str,
+    timeout_s: int,
+):
+    """Drain ``stream`` through ``apply_batch(batch_df, batch_id)`` and
+    return ``apply_batch``, so tests can replay an epoch directly."""
+    drain_available_now(
+        stream.writeStream.foreachBatch(apply_batch).option(
+            "checkpointLocation", checkpoint_dir
+        ),
+        what,
+        timeout_s,
+    )
+    return apply_batch
+
+
+def default_sink_name(checkpoint_dir: str) -> str:
+    """Run-id namespace of a sink: a stable hash of its checkpoint dir.
+    Batch ids restart at 0 per checkpoint, so the same checkpoint keeps
+    the same namespace (replays stay idempotent) and a fresh checkpoint
+    gets disjoint run ids (no collision with committed ``batch-0``)."""
+    return hashlib.sha256(checkpoint_dir.encode()).hexdigest()[:12]
+
+
+def overwrite_batch_partition(
+    df: DataFrame, batch_id: int, path: str, *partition_cols: str
+) -> None:
+    """Write ``df`` as the ``__batch_id=batch_id`` partition of ``path``
+    (further partitioned by ``partition_cols``) with dynamic partition
+    overwrite: a replayed epoch rewrites exactly its own partitions."""
+    (
+        df.withColumn("__batch_id", F.lit(int(batch_id)))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("__batch_id", *partition_cols)
+        .parquet(path)
+    )
+
+
+def committed_versions(path: str) -> list[int]:
+    """Ascending versions N of the ``path/v=N`` snapshots whose write
+    committed (``_SUCCESS`` present). Lists the local directory (tests run
+    on local-fs); a production deployment swaps in a FileSystem listing
+    or a transaction log — the versioning contract is the point."""
+    if not os.path.isdir(path):
+        return []
+    return sorted(
+        int(d.split("=", 1)[1])
+        for d in os.listdir(path)
+        if d.startswith("v=")
+        and os.path.exists(os.path.join(path, d, "_SUCCESS"))
+    )
+
+
+def directory_cut_stream(
+    stream: DataFrame,
+    directory_table: str,
+    out_table: str,
+    checkpoint_dir: str,
+    cut,
+    empty_directory,
+    what: str,
+    timeout_s: int,
+    sink_name: str | None,
+    delta_tag: str = "dir",
+):
+    """The as-of directory-cut protocol every incremental dedup stream
+    runs. Per micro-batch: ``cut(batch_df, directory) -> (out, delta)``
+    against ``directory_table`` read AS OF the version preceding the
+    batch's own delta commit (``empty_directory(batch_df)`` when there
+    is none), then commit ``delta`` under ``{sink}-{delta_tag}-batch-N``
+    and ``out`` under ``{sink}-out-batch-N``. A failed epoch may already
+    have committed its delta; the as-of read makes its replay see exactly
+    what the first attempt saw, and both commits no-op on their run ids.
+    Returns the per-batch function after the stream drains."""
+    from g_data_pipeline_spark.sources import txn
+
+    if sink_name is None:
+        sink_name = default_sink_name(checkpoint_dir)
+
+    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        delta_rid = f"{sink_name}-{delta_tag}-batch-{int(batch_id)}"
+        out_rid = f"{sink_name}-out-batch-{int(batch_id)}"
+        directory = txn.read_as_of_run(
+            spark, directory_table, delta_rid,
+            lambda: empty_directory(batch_df),
+        )
+        out, delta = cut(batch_df, directory)
+        # both frames derive from one tree: materialize each once
+        out = out.localCheckpoint(eager=True)
+        delta = delta.localCheckpoint(eager=True)
+        txn.commit_write(
+            spark, delta, directory_table, run_id=delta_rid, mode="append"
+        )
+        txn.commit_write(
+            spark, out, out_table, run_id=out_rid, mode="append"
+        )
+
+    return run_foreach_batch(
+        stream, apply_batch, checkpoint_dir, what, timeout_s
+    )
+
+
 def run_available_now(
     df: DataFrame,
     query_name: str,
@@ -175,25 +308,14 @@ def run_available_now(
     This is the batch-parity harness: the stream consumes the same files a
     batch job would read, so outputs must match the batch operator exactly
     (asserted in tests/test_streaming.py)."""
-    spark = df.sparkSession
-    q = (
+    drain_available_now(
         df.writeStream.format("memory")
         .queryName(query_name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
+        .outputMode(output_mode),
+        f"streaming query {query_name!r}",
+        timeout_s,
     )
-    try:
-        finished = q.awaitTermination(timeout_s)
-        if not finished:
-            raise TimeoutError(
-                f"streaming query {query_name!r} did not finish its "
-                f"AvailableNow batch within {timeout_s}s — refusing to return "
-                "a partially-processed memory-sink table"
-            )
-    finally:
-        q.stop()
-    return spark.table(query_name)
+    return df.sparkSession.table(query_name)
 
 
 def enrich_events_stream(stream: DataFrame, users: DataFrame) -> DataFrame:
@@ -277,29 +399,11 @@ def exactly_once_parquet_sink(
     """
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("__batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id")
-            .parquet(path)
-        )
+        overwrite_batch_partition(batch_df, batch_id, path)
 
-    q = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_foreach_batch(
+        stream, write_batch, checkpoint_dir, "exactly-once sink", timeout_s
     )
-    try:
-        finished = q.awaitTermination(timeout_s)
-        if not finished:
-            raise TimeoutError(
-                f"exactly-once sink did not drain within {timeout_s}s"
-            )
-    finally:
-        q.stop()
-    return write_batch
 
 
 def streaming_merge_sink(
@@ -328,24 +432,11 @@ def streaming_merge_sink(
     listing mechanism. Returns the per-batch function so tests can replay
     an epoch directly.
     """
-    import os
-
-    def committed_versions() -> list[int]:
-        if not os.path.isdir(path):
-            return []
-        out = []
-        for d in os.listdir(path):
-            if d.startswith("v=") and os.path.exists(
-                os.path.join(path, d, "_SUCCESS")
-            ):
-                out.append(int(d.split("=", 1)[1]))
-        return sorted(out)
-
     from g_data_pipeline_spark.operators.cdc import merge_latest
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        prior = [v for v in committed_versions() if v < batch_id]
+        prior = [v for v in committed_versions(path) if v < batch_id]
         snap = (
             spark.read.parquet(os.path.join(path, f"v={prior[-1]}"))
             if prior
@@ -356,21 +447,10 @@ def streaming_merge_sink(
             os.path.join(path, f"v={batch_id}")
         )
 
-    q = (
-        changes_stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_foreach_batch(
+        changes_stream, apply_batch, checkpoint_dir, "streaming merge sink",
+        timeout_s,
     )
-    try:
-        finished = q.awaitTermination(timeout_s)
-        if not finished:
-            raise TimeoutError(
-                f"streaming merge sink did not drain within {timeout_s}s"
-            )
-    finally:
-        q.stop()
-    return apply_batch
 
 
 def streaming_rollup_sink(
@@ -402,27 +482,15 @@ def streaming_rollup_sink(
     (same layout). Returns the per-batch function so tests can replay an
     epoch directly.
     """
-    import os
-
     from g_data_pipeline_spark.operators.matview import (
         aggregate_batch,
         merge_states,
     )
 
-    def committed_versions() -> list[int]:
-        if not os.path.isdir(path):
-            return []
-        return sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(path)
-            if d.startswith("v=")
-            and os.path.exists(os.path.join(path, d, "_SUCCESS"))
-        )
-
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         fresh = aggregate_batch(batch_df, spec)
-        prior = [v for v in committed_versions() if v < batch_id]
+        prior = [v for v in committed_versions(path) if v < batch_id]
         if prior:
             old = spark.read.parquet(os.path.join(path, f"v={prior[-1]}"))
             fresh = merge_states(old, fresh, spec)
@@ -430,34 +498,16 @@ def streaming_rollup_sink(
             os.path.join(path, f"v={batch_id}")
         )
 
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_foreach_batch(
+        stream, apply_batch, checkpoint_dir, "streaming rollup sink",
+        timeout_s,
     )
-    try:
-        finished = q.awaitTermination(timeout_s)
-        if not finished:
-            raise TimeoutError(
-                f"streaming rollup sink did not drain within {timeout_s}s"
-            )
-    finally:
-        q.stop()
-    return apply_batch
 
 
 def read_merge_snapshot(spark: SparkSession, path: str) -> DataFrame:
     """Current state of a :func:`streaming_merge_sink` target (max
     committed version)."""
-    import os
-
-    versions = sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(path)
-        if d.startswith("v=")
-        and os.path.exists(os.path.join(path, d, "_SUCCESS"))
-    )
+    versions = committed_versions(path)
     if not versions:
         raise FileNotFoundError(f"no committed snapshot under {path}")
     return spark.read.parquet(os.path.join(path, f"v={versions[-1]}"))
@@ -576,36 +626,15 @@ def incremental_dedup_stream(
             id_col,
             history_fp_col="fingerprint",
         ).localCheckpoint(eager=True)  # two writes consume this subtree
-        stamped = survivors.withColumn("__batch_id", F.lit(int(batch_id)))
-        (
-            stamped.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id")
-            .parquet(out_path)
-        )
-        (
-            stamped.select("fingerprint", "__batch_id")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id")
-            .parquet(archive_path)
+        overwrite_batch_partition(survivors, batch_id, out_path)
+        overwrite_batch_partition(
+            survivors.select("fingerprint"), batch_id, archive_path
         )
 
-    q = (
-        docs_stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_foreach_batch(
+        docs_stream, apply_batch, checkpoint_dir, "incremental dedup stream",
+        timeout_s,
     )
-    try:
-        finished = q.awaitTermination(timeout_s)
-        if not finished:
-            raise TimeoutError(
-                f"incremental dedup stream did not drain within {timeout_s}s"
-            )
-    finally:
-        q.stop()
-    return apply_batch
 
 
 def profile_maintenance_stream(
@@ -698,31 +727,16 @@ def _partial_maintenance_stream(
     directly."""
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            partial_fn(
-                batch_df, F.lit(int(batch_id)).alias("__batch_id")
-            )
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id")
-            .parquet(stats_path)
+        overwrite_batch_partition(
+            partial_fn(batch_df, F.lit(int(batch_id)).alias("__batch_id")),
+            batch_id,
+            stats_path,
         )
 
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_foreach_batch(
+        stream, apply_batch, checkpoint_dir, "stats maintenance stream",
+        timeout_s,
     )
-    try:
-        finished = q.awaitTermination(timeout_s)
-        if not finished:
-            raise TimeoutError(
-                f"stats maintenance stream did not drain within {timeout_s}s"
-            )
-    finally:
-        q.stop()
-    return apply_batch
 
 
 def txn_commit_sink(
@@ -757,12 +771,10 @@ def txn_commit_sink(
     makes the COMMIT idempotent and adds atomic visibility + time travel.
     Returns the per-batch writer so tests can invoke simulated replays.
     """
-    import hashlib
-
     from g_data_pipeline_spark.sources import txn
 
     if sink_name is None:
-        sink_name = hashlib.sha256(checkpoint_dir.encode()).hexdigest()[:12]
+        sink_name = default_sink_name(checkpoint_dir)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         txn.commit_write(
@@ -773,21 +785,9 @@ def txn_commit_sink(
             mode="append",
         )
 
-    q = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_foreach_batch(
+        stream, write_batch, checkpoint_dir, "txn commit sink", timeout_s
     )
-    try:
-        finished = q.awaitTermination(timeout_s)
-        if not finished:
-            raise TimeoutError(
-                f"txn commit sink did not drain within {timeout_s}s"
-            )
-    finally:
-        q.stop()
-    return write_batch
 
 
 def substring_dedup_stream(
@@ -817,73 +817,27 @@ def substring_dedup_stream(
     version PRECEDING this batch's own delta commit (the manifest's
     parent), pinned by the delta run_id — a replay reads exactly the
     state the first attempt saw. run_ids are namespaced per checkpoint
-    dir (the txn_commit_sink lesson: batch ids restart at 0 per
+    dir (``default_sink_name``: batch ids restart at 0 per
     checkpoint).
 
     Returns the per-batch function after the AvailableNow trigger drains,
     so tests can invoke simulated replays directly.
     """
-    import hashlib
-
     from g_data_pipeline_spark.operators.dedup import (
         incremental_substring_dedup,
     )
-    from g_data_pipeline_spark.sources import txn
 
-    if sink_name is None:
-        sink_name = hashlib.sha256(checkpoint_dir.encode()).hexdigest()[:12]
-
-    _DIR_SCHEMA = "h string, owner_id long, owner_pos int"
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        delta_rid = f"{sink_name}-dir-batch-{int(batch_id)}"
-        out_rid = f"{sink_name}-out-batch-{int(batch_id)}"
-        # Directory AS OF the version before this batch's own delta —
-        # one O(1) run-marker lookup (txn.version_before_run), not a scan
-        # of every manifest per micro-batch (O(versions) per batch was
-        # O(n^2) over a stream's lifetime at crawl-dump cadence).
-        read_version = txn.version_before_run(
-            spark, directory_table, delta_rid
-        )
-        if read_version is None:
-            directory = spark.createDataFrame([], _DIR_SCHEMA)
-        else:
-            directory = txn.read_committed(
-                spark, directory_table, version=read_version
-            )
-        cleaned, delta = incremental_substring_dedup(
-            batch_df,
-            directory,
-            id_col,
-            text_col,
+    return directory_cut_stream(
+        stream, directory_table, out_table, checkpoint_dir,
+        lambda batch_df, directory: incremental_substring_dedup(
+            batch_df, directory, id_col, text_col,
             window_tokens=window_tokens,
-        )
-        # both frames derive from one occurrence tree: materialize once
-        cleaned = cleaned.localCheckpoint(eager=True)
-        delta = delta.localCheckpoint(eager=True)
-        txn.commit_write(
-            spark, delta, directory_table, run_id=delta_rid, mode="append"
-        )
-        txn.commit_write(
-            spark, cleaned, out_table, run_id=out_rid, mode="append"
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        lambda batch_df: batch_df.sparkSession.createDataFrame(
+            [], "h string, owner_id long, owner_pos int"
+        ),
+        "substring dedup stream", timeout_s, sink_name,
     )
-    try:
-        finished = q.awaitTermination(timeout_s)
-        if not finished:
-            raise TimeoutError(
-                f"substring dedup stream did not drain within {timeout_s}s"
-            )
-    finally:
-        q.stop()
-    return apply_batch
 
 
 def minhash_dedup_stream(
@@ -918,73 +872,25 @@ def minhash_dedup_stream(
     bucket-min survivorship runs over all batch docs (see the operator
     docstring), so a replay emits byte-identical labels.
     """
-    import hashlib
-
     from g_data_pipeline_spark.operators.dedup import (
         incremental_minhash_dedup,
         minhash_band_directory,
     )
-    from g_data_pipeline_spark.sources import txn
 
-    if sink_name is None:
-        sink_name = hashlib.sha256(checkpoint_dir.encode()).hexdigest()[:12]
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        delta_rid = f"{sink_name}-dir-batch-{int(batch_id)}"
-        out_rid = f"{sink_name}-out-batch-{int(batch_id)}"
-        read_version = txn.version_before_run(
-            spark, directory_table, delta_rid
-        )
-        if read_version is None:
-            # empty directory with the right (family-dependent) schema
-            directory = minhash_band_directory(
-                batch_df.limit(0),
-                id_col,
-                text_col,
-                n=n,
-                num_hashes=num_hashes,
-                bands=bands,
-                hash_family=hash_family,
-            )
-        else:
-            directory = txn.read_committed(
-                spark, directory_table, version=read_version
-            )
-        labeled, delta = incremental_minhash_dedup(
-            batch_df,
-            directory,
-            id_col,
-            text_col,
-            n=n,
-            num_hashes=num_hashes,
-            bands=bands,
-            hash_family=hash_family,
-        )
-        labeled = labeled.localCheckpoint(eager=True)
-        delta = delta.localCheckpoint(eager=True)
-        txn.commit_write(
-            spark, delta, directory_table, run_id=delta_rid, mode="append"
-        )
-        txn.commit_write(
-            spark, labeled, out_table, run_id=out_rid, mode="append"
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    family = dict(
+        n=n, num_hashes=num_hashes, bands=bands, hash_family=hash_family
     )
-    try:
-        finished = q.awaitTermination(timeout_s)
-        if not finished:
-            raise TimeoutError(
-                f"minhash dedup stream did not drain within {timeout_s}s"
-            )
-    finally:
-        q.stop()
-    return apply_batch
+    return directory_cut_stream(
+        stream, directory_table, out_table, checkpoint_dir,
+        lambda batch_df, directory: incremental_minhash_dedup(
+            batch_df, directory, id_col, text_col, **family
+        ),
+        # empty directory with the right (family-dependent) schema
+        lambda batch_df: minhash_band_directory(
+            batch_df.limit(0), id_col, text_col, **family
+        ),
+        "minhash dedup stream", timeout_s, sink_name,
+    )
 
 
 def crawl_curation_stream(
@@ -1006,18 +912,16 @@ def crawl_curation_stream(
     Structured Streaming replaying a failed epoch under the same
     batch_id is a pure no-op at every stage boundary (mid-tick crashes
     resume from the exact table that missed its commit). run_ids are
-    namespaced per checkpoint dir (the txn_commit_sink lesson: batch ids
+    namespaced per checkpoint dir (``default_sink_name``: batch ids
     restart at 0 per checkpoint).
 
     Returns the per-batch function after the AvailableNow trigger
     drains, so tests can invoke simulated replays directly.
     """
-    import hashlib
-
     from g_data_pipeline_spark.pipelines import crawl_curation_tick
 
     if sink_name is None:
-        sink_name = hashlib.sha256(checkpoint_dir.encode()).hexdigest()[:12]
+        sink_name = default_sink_name(checkpoint_dir)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         crawl_curation_tick(
@@ -1028,18 +932,7 @@ def crawl_curation_stream(
             **tick_kwargs,
         )
 
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_foreach_batch(
+        stream, apply_batch, checkpoint_dir, "crawl curation stream",
+        timeout_s,
     )
-    try:
-        finished = q.awaitTermination(timeout_s)
-        if not finished:
-            raise TimeoutError(
-                f"crawl curation stream did not drain within {timeout_s}s"
-            )
-    finally:
-        q.stop()
-    return apply_batch

@@ -138,6 +138,39 @@ def test_query_missing_job_id_400(app):
     assert status == 400
 
 
+@pytest.mark.parametrize("max_rows", [10**12, -1])
+def test_query_max_rows_outside_ceiling_400(app, job_id, max_rows):
+    req = json.dumps(
+        {"job_id": job_id, "query": "average age", "max_rows": max_rows}
+    ).encode()
+    status, out = call(app, "POST", "/api/conversation/query", body=req)
+    assert status == 400 and "max_rows" in out["error"]
+
+
+def test_query_unknown_job_404(app):
+    req = json.dumps(
+        {"job_id": "00000000-0000-0000-0000-000000000000", "query": "count"}
+    ).encode()
+    status, out = call(app, "POST", "/api/conversation/query", body=req)
+    assert status == 404
+
+
+def test_query_unfinished_job_409(spark, tmp_path):
+    svc = DataPipelineService(spark, str(tmp_path / "q"))
+    queued_app = PipelineApp(svc, process_inline=False)
+    status, out = call(
+        queued_app,
+        "POST",
+        "/upload",
+        body=b"a,b\n1,2\n",
+        headers={"X-Filename": "t.csv"},
+    )
+    assert status == 200
+    req = json.dumps({"job_id": out["job_id"], "query": "count"}).encode()
+    status, out = call(queued_app, "POST", "/api/conversation/query", body=req)
+    assert status == 409 and out["status"] == "queued"
+
+
 def test_debug_files_lists_store_keys(app, job_id):
     status, out = call(app, "GET", "/debug/files")
     assert status == 200

@@ -125,7 +125,7 @@ def test_streaming_twin_exactly_once(spark, tmp_path):
         stream = spark.readStream.schema(
             "media_id long, content binary"
         ).parquet(src)
-        phash_neardup_stream(stream, dir_t, out_t, ckpt)
+        return phash_neardup_stream(stream, dir_t, out_t, ckpt)
 
     _media(spark, [(1, _checker()), (3, _checker(invert=True))]).write.mode(
         "append"
@@ -140,8 +140,25 @@ def test_streaming_twin_exactly_once(spark, tmp_path):
     assert not got[1].is_dup and not got[3].is_dup
     assert got[10].is_dup and got[20].is_dup  # both near 1, archived
     v = txn.latest_version(spark, out_t)
-    run()  # no new files -> no new commits
+    apply_batch = run()  # no new files -> no new commits
     assert txn.latest_version(spark, out_t) == v
+
+    # replaying batch 0 through the returned per-batch function no-ops on
+    # its run ids: both tables keep their committed versions and rows
+    def snapshot():
+        return {
+            t: (
+                txn.latest_version(spark, t),
+                sorted(map(tuple, txn.read_committed(spark, t).collect())),
+            )
+            for t in (out_t, dir_t)
+        }
+
+    before = snapshot()
+    apply_batch(
+        _media(spark, [(1, _checker()), (3, _checker(invert=True))]), 0
+    )
+    assert snapshot() == before
 
 
 def test_empty_directory_schema_matches_delta(spark):

@@ -251,3 +251,70 @@ def test_conversation_followup_resolves_column_from_history(svc, job_id):
     cid = out1["conversation_id"]
     out2 = svc.query(job_id, query_text="and the total?", conversation_id=cid)
     assert "sum_score" in out2["data"][0]  # 'score' came from turn 1
+
+
+def test_conversation_contexts_are_capped(svc, job_id, monkeypatch):
+    import g_data_pipeline_spark.service as service_mod
+
+    monkeypatch.setattr(service_mod, "MAX_CONVERSATIONS", 3)
+    cids = [
+        svc.query(job_id, query_text="what is the average score?")[
+            "conversation_id"
+        ]
+        for _ in range(5)
+    ]
+    assert len(svc.conversations) <= 3
+    assert cids[0] not in svc.conversations
+    out = svc.query(job_id, query_text="and the total?", conversation_id=cids[-1])
+    assert out["conversation_id"] == cids[-1]
+    assert "sum_score" in out["data"][0]  # history of the newest survived
+
+
+def test_conversation_registry_is_thread_safe(svc, job_id, monkeypatch):
+    import sys
+    import threading
+
+    import g_data_pipeline_spark.service as service_mod
+
+    got: list = []
+    errors: list = []
+
+    def run(n_threads, work):
+        barrier = threading.Barrier(n_threads)
+
+        def worker():
+            try:
+                barrier.wait(timeout=10)
+                work()
+            except Exception as exc:  # noqa: BLE001 — reported below
+                errors.append(exc)
+
+        threads = [threading.Thread(target=worker) for _ in range(n_threads)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+        assert not any(t.is_alive() for t in threads)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        # concurrent first opens of one id must share one context
+        run(
+            16,
+            lambda: got.extend(
+                svc._conversation(f"shared-{k}", job_id) for k in range(300)
+            ),
+        )
+        # churn past the cap: eviction never races a lookup
+        monkeypatch.setattr(service_mod, "MAX_CONVERSATIONS", 5)
+        run(16, lambda: [svc._conversation(None, job_id) for _ in range(200)])
+    finally:
+        sys.setswitchinterval(old)
+    assert errors == []
+    contexts: dict = {}
+    for ctx in got:
+        contexts.setdefault(ctx.id, set()).add(id(ctx))
+    assert len(contexts) == 300
+    assert all(len(objs) == 1 for objs in contexts.values())
+    assert len(svc.conversations) == 5
