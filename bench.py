@@ -13,6 +13,8 @@ spill, rows scanned, exchange count) harvested from the executed plans via
 operators/runprofile.py — is written to BENCH_DETAIL.json at the repo root
 so round-over-round constant-factor regressions (e.g. a query silently
 re-scanning its fact table) are machine-diffable, not just wall-clock.
+BENCH_DETAIL.json is the gitignored working record and the next run's
+baseline; round snapshots are committed as BENCH_DETAIL_rNN.json.
 
 Each query is forced with ``collect()`` (see ``_force``): write sinks build a
 fresh QueryExecution per action and re-pay codegen compilation, while
@@ -265,7 +267,8 @@ HEADLINE = [
 # wildly), and the growth ratio that trips a violation. A tripped entry
 # must either be fixed or waived with a reason in
 # BENCH_ALLOWED_REGRESSIONS.json — tests/test_bench_regression.py fails on
-# unwaived violations recorded in the committed BENCH_DETAIL.json.
+# unwaived violations in the committed BENCH_DETAIL_rNN.json snapshots,
+# recorded or re-derived between consecutive same-sf rounds.
 REGRESSION_METRICS = {
     "shuffle_bytes_written": 1 << 20,  # floor: 1 MiB
     "rows_scanned": 100_000,

@@ -1,14 +1,17 @@
 """The runtime-metrics regression gate (bench.check_runtime_regressions):
 counter growth past 2x above the noise floor must trip, waivers must
-annotate instead, and the committed BENCH_DETAIL.json must carry no
-unwaived violations."""
+annotate instead, and every committed BENCH_DETAIL_rNN.json snapshot
+(and the chain between them) must carry no unwaived violations."""
 
 from __future__ import annotations
 
 import json
+import re
 from pathlib import Path
 
 from bench import REGRESSION_RATIO, check_runtime_regressions
+
+REPO_ROOT = Path(__file__).resolve().parents[1]
 
 PREV = {
     "q_big_shuffle": {
@@ -94,12 +97,35 @@ def test_collect_count_change_suppresses_compare():
 
 
 def test_committed_bench_detail_has_no_unwaived_violations():
-    detail = json.loads(
-        (Path(__file__).resolve().parents[1] / "BENCH_DETAIL.json").read_text()
+    # Round snapshots, oldest first. BENCH_DETAIL.json itself is bench.py's
+    # gitignored working record and is never committed.
+    rounds = sorted(
+        (int(m.group(1)), p)
+        for p in REPO_ROOT.glob("BENCH_DETAIL_r*.json")
+        if (m := re.fullmatch(r"BENCH_DETAIL_r(\d+)\.json", p.name))
     )
-    reg = detail.get("runtime_regressions", {"violations": []})
-    assert reg["violations"] == [], (
-        "BENCH_DETAIL.json records unwaived runtime regressions — fix the "
-        "plan or waive with a reason in BENCH_ALLOWED_REGRESSIONS.json: "
-        f"{reg['violations']}"
+    details = [(p.name, json.loads(p.read_text())) for _, p in rounds]
+    assert details, "no committed BENCH_DETAIL_rNN.json snapshot to check"
+    for name, detail in details:
+        reg = detail.get("runtime_regressions", {"violations": []})
+        assert reg["violations"] == [], (
+            f"{name} records unwaived runtime regressions — fix the "
+            "plan or waive with a reason in BENCH_ALLOWED_REGRESSIONS.json: "
+            f"{reg['violations']}"
+        )
+    # Re-derive the claim from the committed counters: the comparison
+    # bench.emit runs against its baseline, over each same-sf round pair.
+    allowed = json.loads(
+        (REPO_ROOT / "BENCH_ALLOWED_REGRESSIONS.json").read_text()
     )
+    for (prev_name, prev), (new_name, new) in zip(details, details[1:]):
+        if prev.get("sf") != new.get("sf"):
+            continue
+        violations, _ = check_runtime_regressions(
+            prev["runtime_metrics"], new["runtime_metrics"], allowed
+        )
+        assert violations == [], (
+            f"{prev_name} -> {new_name} shows unwaived runtime regressions "
+            "— fix the plan or waive with a reason in "
+            f"BENCH_ALLOWED_REGRESSIONS.json: {violations}"
+        )
