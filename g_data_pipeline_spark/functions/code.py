@@ -64,7 +64,7 @@ def code_signals(
     # Char-class counts via translate (one char-map pass, no regex
     # engine, no stripped-copy allocation) — r10 A/B: ~15-20% off the
     # whole scan stage vs the regexp_replace strips, outputs proven
-    # bit-identical on the sf0.1 corpus (tools_exp_scanwork.py).
+    # bit-identical on the sf0.1 corpus (OPTIMIZATION_r10.md).
     n_alpha = total_len - F.length(F.translate(text, _ALPHA52, ""))
     n_symbol = total_len - F.length(F.translate(text, "{}[]();=<>", ""))
     n_long = F.size(F.filter(line_lens, lambda n: n > F.lit(int(long_line))))

@@ -10,8 +10,11 @@ Route parity with ``/root/reference/src/main.rs:130-148``:
     POST /api/conversation/query    {"job_id", "query" | "ir",
                                      "conversation_id"?, "max_rows"?} ->
                                     query response; 404 unknown job / 409
-                                    job not completed / 400 max_rows
-                                    outside 0..MAX_RESULT_ROWS
+                                    job not completed / 400 body or ir
+                                    not an object, job_id/query/
+                                    conversation_id not a string, or
+                                    max_rows not an integer in
+                                    0..MAX_RESULT_ROWS
     GET  /debug/files               object-store key listing
 
 The app is a plain WSGI callable over :class:`DataPipelineService` — any
@@ -158,11 +161,22 @@ class PipelineApp:
 
     def _query(self, environ: dict[str, Any]) -> tuple[str, dict[str, Any]]:
         req = json.loads(self._read_body(environ) or b"{}")
+        if not isinstance(req, dict):
+            raise ValueError("the request body must be a JSON object")
         if "job_id" not in req:
             raise ValueError("job_id is required")
-        max_rows = int(req.get("max_rows", MAX_RESULT_ROWS))
-        if not 0 <= max_rows <= MAX_RESULT_ROWS:
-            raise ValueError(f"max_rows must be in 0..{MAX_RESULT_ROWS}")
+        for key in ("job_id", "query", "conversation_id"):
+            if req.get(key) is not None and not isinstance(req[key], str):
+                raise ValueError(f"{key} must be a string")
+        max_rows = req.get("max_rows", MAX_RESULT_ROWS)
+        # a JSON integer only: bool is an int subclass, 1.5 and "10" are not
+        if (
+            type(max_rows) is not int
+            or not 0 <= max_rows <= MAX_RESULT_ROWS
+        ):
+            raise ValueError(
+                f"max_rows must be an integer in 0..{MAX_RESULT_ROWS}"
+            )
         job_id = req["job_id"]
         job = self.service.jobs.get(job_id)
         if job is None:

@@ -95,6 +95,8 @@ class StructuredQuery:
         emits but never parses — SURVEY.md §2.5 N3 calls out the stub; here
         parsing is implemented for real)."""
         obj = json.loads(payload) if isinstance(payload, str) else payload
+        if not isinstance(obj, dict):
+            raise ValueError("the IR must be a JSON object")
         intent = QueryIntent(str(obj.get("intent", "describe")).lower())
         ops = []
         for raw in obj.get("operations", []):

@@ -173,7 +173,8 @@ def merged_profile(
     folded = merged_states(partials, cols, by)
 
     # Derived stats: exact decimal moments -> fixed-order double arithmetic
-    # (deterministic; same policy as profiler.numeric_stat_exprs).
+    # (deterministic; same policy as the registry's exact builders,
+    # query_defs.reference_surface.exact_numeric_stat_exprs).
     per_col = []
     for c in cols:
         cnt = F.col(_c(c, "cnt"))

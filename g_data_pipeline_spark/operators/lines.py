@@ -280,7 +280,7 @@ def c4_clean(
 
     def line_keep(l: Column) -> Column:
         # r10 per-task forms (outputs proven bit-identical on the sf0.1
-        # corpus, tools_exp_scanwork.py, ~15% off the scan stage):
+        # corpus, OPTIMIZATION_r10.md, ~15% off the scan stage):
         # word count = whitespace-run count + 1 (true for any string,
         # split keeps leading/trailing empties) without materializing
         # the token array; the terminal-punctuation regex '[.!?"\'] *\z'

@@ -133,7 +133,8 @@ class metrics_tap:
     block; ``.metrics`` holds the combined rows afterwards::
 
         with metrics_tap() as tap:
-            profile(df)
+            for plan in plans:       # each already collected
+                tap_action(plan)
         summary = run_summary(tap.metrics)
     """
 

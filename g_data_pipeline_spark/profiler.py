@@ -25,8 +25,13 @@ DuckDB oracle (SURVEY.md §4.3.5). Above it, both switch to sketches: HLL
 once per column before the shuffle) and the GK ``percentile_approx`` (no
 reducer holding every value of a column) — the scale escape hatch of
 SURVEY.md §7. Exact answers on test-sized data; a 100 TB table never pays a
-full per-column value sort by accident. The oracle-gated queries call the
-expression builders below with explicit methods and are unaffected.
+full per-column value sort by accident.
+
+One mode: this module is the service profiler. The registry's oracle-gated
+``p_*`` queries reuse its exact count and percentile builders, and keep
+their own exact-decimal mean/stddev/correlation builders and DuckDB twins
+in ``query_defs/reference_surface.py`` (bit-identical doubles against the
+oracle need decimal sums that the service does not pay for).
 
 Semantics pinned against the reference (SURVEY.md §4.3):
 
@@ -38,8 +43,8 @@ Semantics pinned against the reference (SURVEY.md §4.3):
   reference mixes full-column means into pairwise-complete covariance
   (processor.rs:458-520), a bug we do not reproduce (§4.3.1).
 - top-10 frequent values: categorical columns only, count-desc with value
-  as the deterministic tiebreaker (the reference's ordering on ties is
-  unspecified, §2.3 P10).
+  as the tiebreaker, so the order is fixed (the reference's ordering on
+  ties is unspecified, §2.3 P10).
 """
 
 from __future__ import annotations
@@ -51,11 +56,6 @@ from typing import Any
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from g_data_pipeline_spark.functions.deterministic import davg, dsum
-from g_data_pipeline_spark.operators.runprofile import (
-    tap_action as _tap_action,
-)
 
 NUMERIC_STATS = ("min", "max", "mean", "median", "std_dev", "percentile_25", "percentile_75")
 
@@ -98,7 +98,9 @@ def classify_columns(df: DataFrame) -> ColumnClasses:
 
 
 # --------------------------------------------------------------------------
-# Expression builders — shared by profile() and the oracle-gated queries.
+# Expression builders — profile()'s own. The oracle-gated p_* queries reuse
+# the count and percentile builders; their exact-decimal stats live with
+# them in query_defs/reference_surface.py.
 # --------------------------------------------------------------------------
 
 def null_count_expr(col: str) -> Column:
@@ -148,89 +150,22 @@ def resolve_stat_method(df: DataFrame) -> str:
     return "exact" if size <= EXACT_MAX_BYTES else "approx"
 
 
-def numeric_stat_exprs(
-    col: str,
-    deterministic: bool = False,
-) -> dict[str, Column]:
+def numeric_stat_exprs(col: str) -> dict[str, Column]:
     """P5/P6/P8 for one numeric column (the codegen-friendly stats — min/max/
     mean/stddev); percentiles live in :func:`percentile_expr`."""
     c = F.col(col).cast("double")
-    if deterministic:
-        # Exact decimal sums -> identical doubles on any engine/partitioning.
-        # sum(x^2) uses scale=4 (squares of <=2dp inputs are exactly 4dp) and
-        # hi/lo split sums (totals of ~1e10-per-row terms exceed 2^63*1e-4).
-        n = F.count(c)
-        s1 = dsum(c)
-        s2 = dsum(c * c, scale=4, split=True)
-        mean = s1 / n
-        # sample variance = (S2 - S1^2/n) / (n-1); deterministic, matches the
-        # same formula on the oracle side. (Library default path uses the
-        # numerically-stabler built-in instead.)
-        var = (s2 - (s1 * s1) / n) / (n - F.lit(1))
-        std = F.sqrt(var)
-    else:
-        mean = F.avg(c)
-        std = F.stddev_samp(c)
     return {
         "min": F.min(c),
         "max": F.max(c),
-        "mean": mean,
-        "std_dev": std,
+        "mean": F.avg(c),
+        "std_dev": F.stddev_samp(c),
     }
 
 
-def corr_expr(c1: str, c2: str, deterministic: bool = False) -> Column:
+def corr_expr(c1: str, c2: str) -> Column:
     """P11/P12: standard pairwise-complete Pearson (reference bug not
     reproduced — SURVEY.md §4.3.1)."""
-    if not deterministic:
-        return F.corr(c1, c2)
-    x = F.col(c1).cast("double")
-    y = F.col(c2).cast("double")
-    both = F.when(x.isNotNull() & y.isNotNull(), F.lit(1))
-    n = F.count(both)
-    # Pairwise-complete decimal sums; products of <=2dp inputs are <=4dp.
-    sx = dsum(F.when(both.isNotNull(), x))
-    sy = dsum(F.when(both.isNotNull(), y))
-    sxx = dsum(F.when(both.isNotNull(), x * x), scale=4, split=True)
-    syy = dsum(F.when(both.isNotNull(), y * y), scale=4, split=True)
-    sxy = dsum(F.when(both.isNotNull(), x * y), scale=4, split=True)
-    cov = sxy - sx * sy / n
-    vx = sxx - sx * sx / n
-    vy = syy - sy * sy / n
-    return F.when((vx > 0) & (vy > 0), cov / F.sqrt(vx * vy))
-
-
-def sql_numeric_stats(col: str, deterministic: bool = True) -> dict[str, str]:
-    """DuckDB twins of :func:`numeric_stat_exprs` (deterministic mode)."""
-    from g_data_pipeline_spark.functions.deterministic import sql_dsum
-
-    n = f"COUNT({col})"
-    s1 = sql_dsum(col)
-    s2 = sql_dsum(f"{col}*{col}", scale=4, split=True)
-    return {
-        "min": f"MIN({col})",
-        "max": f"MAX({col})",
-        "mean": f"{s1} / {n}",
-        "median": f"QUANTILE_CONT({col}, 0.5)",
-        "std_dev": f"SQRT(({s2} - ({s1})*({s1})/{n}) / ({n} - 1))",
-        "percentile_25": f"QUANTILE_CONT({col}, 0.25)",
-        "percentile_75": f"QUANTILE_CONT({col}, 0.75)",
-    }
-
-
-def sql_corr(c1: str, c2: str) -> str:
-    """DuckDB twin of deterministic :func:`corr_expr` (no-null case)."""
-    from g_data_pipeline_spark.functions.deterministic import sql_dsum
-
-    n = "COUNT(*)"
-    sx, sy = sql_dsum(c1), sql_dsum(c2)
-    sxx = sql_dsum(f"{c1}*{c1}", scale=4, split=True)
-    syy = sql_dsum(f"{c2}*{c2}", scale=4, split=True)
-    sxy = sql_dsum(f"{c1}*{c2}", scale=4, split=True)
-    return (
-        f"(({sxy}) - ({sx})*({sy})/{n}) / "
-        f"SQRT((({sxx}) - ({sx})*({sx})/{n}) * (({syy}) - ({sy})*({sy})/{n}))"
-    )
+    return F.corr(c1, c2)
 
 
 # --------------------------------------------------------------------------
@@ -318,14 +253,10 @@ def profile(df: DataFrame) -> dict[str, Any]:
     # small pool lets the next job's tasks back-fill the tail of the
     # current one — on a cluster, stragglers; locally, the single-task
     # scan stages of a one-row-group parquet input). Results are merged
-    # in a FIXED order below, so completion order never affects output;
-    # metric harvesting (_tap_action appends to a module-global list) runs
-    # after the pool, on this thread.
+    # in a FIXED order below, so completion order never affects output.
     with ThreadPoolExecutor(max_workers=min(PROFILE_JOB_POOL, len(jobs))) as pool:
         futs = [(name, pool.submit(plan.collect)) for name, plan in jobs]
         collected = [(name, f.result()) for name, f in futs]
-    for _name, plan in jobs:
-        _tap_action(plan)
 
     row: dict[str, Any] = {}
     tv_rows: dict[str, list] = {}

@@ -3,7 +3,7 @@ flagship pricing summary), registered as oracle-gated queries."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from g_data_pipeline_spark.catalog import load_table
@@ -194,21 +194,89 @@ register(
 
 # --------------------------------------------------------------------------
 # P1-P13: profiler statistics (SURVEY.md §2.3), oracle-gated through the
-# profiler's own expression builders so the gate covers the profile path.
+# profiler's own count and percentile builders so the gate covers the
+# profile path. Mean/stddev/correlation use the exact-decimal builders
+# below instead of the profiler's F.avg/F.stddev_samp/F.corr, so the doubles
+# match the DuckDB oracle bit for bit.
 # --------------------------------------------------------------------------
 
-def _profile_stats_query(table: str, cols: list[str]) -> tuple[SparkQuery, str]:
-    from g_data_pipeline_spark.profiler import (
-        numeric_stat_exprs,
-        percentile_expr,
-        sql_numeric_stats,
+def exact_numeric_stat_exprs(col: str) -> dict[str, Column]:
+    """Exact-decimal twin of ``profiler.numeric_stat_exprs`` (P5/P6/P8):
+    exact decimal sums -> identical doubles on any engine/partitioning.
+    sum(x^2) uses scale=4 (squares of <=2dp inputs are exactly 4dp) and
+    hi/lo split sums (totals of ~1e10-per-row terms exceed 2^63*1e-4)."""
+    c = F.col(col).cast("double")
+    n = F.count(c)
+    s1 = dsum(c)
+    s2 = dsum(c * c, scale=4, split=True)
+    # sample variance = (S2 - S1^2/n) / (n-1); the same formula runs on the
+    # oracle side (sql_numeric_stats).
+    var = (s2 - (s1 * s1) / n) / (n - F.lit(1))
+    return {
+        "min": F.min(c),
+        "max": F.max(c),
+        "mean": s1 / n,
+        "std_dev": F.sqrt(var),
+    }
+
+
+def exact_corr_expr(c1: str, c2: str) -> Column:
+    """Exact-decimal twin of ``profiler.corr_expr`` (P11/P12):
+    pairwise-complete Pearson over decimal sums."""
+    x = F.col(c1).cast("double")
+    y = F.col(c2).cast("double")
+    both = F.when(x.isNotNull() & y.isNotNull(), F.lit(1))
+    n = F.count(both)
+    # Pairwise-complete decimal sums; products of <=2dp inputs are <=4dp.
+    sx = dsum(F.when(both.isNotNull(), x))
+    sy = dsum(F.when(both.isNotNull(), y))
+    sxx = dsum(F.when(both.isNotNull(), x * x), scale=4, split=True)
+    syy = dsum(F.when(both.isNotNull(), y * y), scale=4, split=True)
+    sxy = dsum(F.when(both.isNotNull(), x * y), scale=4, split=True)
+    cov = sxy - sx * sy / n
+    vx = sxx - sx * sx / n
+    vy = syy - sy * sy / n
+    return F.when((vx > 0) & (vy > 0), cov / F.sqrt(vx * vy))
+
+
+def sql_numeric_stats(col: str) -> dict[str, str]:
+    """DuckDB twins of :func:`exact_numeric_stat_exprs` plus the
+    percentiles of ``profiler.percentile_expr``."""
+    n = f"COUNT({col})"
+    s1 = sql_dsum(col)
+    s2 = sql_dsum(f"{col}*{col}", scale=4, split=True)
+    return {
+        "min": f"MIN({col})",
+        "max": f"MAX({col})",
+        "mean": f"{s1} / {n}",
+        "median": f"QUANTILE_CONT({col}, 0.5)",
+        "std_dev": f"SQRT(({s2} - ({s1})*({s1})/{n}) / ({n} - 1))",
+        "percentile_25": f"QUANTILE_CONT({col}, 0.25)",
+        "percentile_75": f"QUANTILE_CONT({col}, 0.75)",
+    }
+
+
+def sql_corr(c1: str, c2: str) -> str:
+    """DuckDB twin of :func:`exact_corr_expr` (no-null case)."""
+    n = "COUNT(*)"
+    sx, sy = sql_dsum(c1), sql_dsum(c2)
+    sxx = sql_dsum(f"{c1}*{c1}", scale=4, split=True)
+    syy = sql_dsum(f"{c2}*{c2}", scale=4, split=True)
+    sxy = sql_dsum(f"{c1}*{c2}", scale=4, split=True)
+    return (
+        f"(({sxy}) - ({sx})*({sy})/{n}) / "
+        f"SQRT((({sxx}) - ({sx})*({sx})/{n}) * (({syy}) - ({sy})*({sy})/{n}))"
     )
+
+
+def _profile_stats_query(table: str, cols: list[str]) -> tuple[SparkQuery, str]:
+    from g_data_pipeline_spark.profiler import percentile_expr
 
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         df = load_table(spark, sf_dir, table)
         exprs = []
         for c in cols:
-            for stat, e in numeric_stat_exprs(c, deterministic=True).items():
+            for stat, e in exact_numeric_stat_exprs(c).items():
                 exprs.append(e.alias(f"{stat}_{c}"))
         fast = df.agg(*exprs)
         # percentiles: separate (imperative-agg) pass, cross-joined — both
@@ -277,14 +345,12 @@ register(
 
 
 def _corr_matrix_query(table: str, cols: list[str]) -> tuple[SparkQuery, str]:
-    from g_data_pipeline_spark.profiler import corr_expr, sql_corr
-
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         df = load_table(spark, sf_dir, table)
         exprs = []
         for i, c1 in enumerate(cols):
             for c2 in cols[i + 1:]:
-                exprs.append(corr_expr(c1, c2, deterministic=True).alias(f"corr_{c1}_{c2}"))
+                exprs.append(exact_corr_expr(c1, c2).alias(f"corr_{c1}_{c2}"))
         return df.agg(*exprs)
 
     select = ", ".join(

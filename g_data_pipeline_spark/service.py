@@ -13,7 +13,8 @@ metadata records *logical* object URIs (``s3a://bucket/key``-style) and every
 Spark read/write resolves them via the injected :class:`ObjectStore` — the
 local fake in tests, hadoop-aws passthrough in production (reference:
 ``s3.rs:40-74`` / ``memory_s3.rs``). The insights cache has the reference's
-24 h TTL (``mod.rs:107``) with an injectable clock. LLM calls (N3 translate /
+24 h TTL (``mod.rs:107``); to change the TTL or the clock, pass
+``insights_cache=TTLCache(ttl_s, clock)``. LLM calls (N3 translate /
 N4 summarize) go through the :mod:`g_data_pipeline_spark.llm` seam; without a
 client the rule-based translator and template prose serve as deterministic
 fallbacks. One uuid identifies upload, job, and dataset (fixing the
@@ -27,7 +28,6 @@ import threading
 import time
 import uuid
 from collections import OrderedDict
-from collections.abc import Callable
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -90,8 +90,6 @@ class DataPipelineService:
         workdir: str,
         store: ObjectStore | None = None,
         llm: LLMClient | None = None,
-        insights_ttl_s: float = 24 * 3600.0,
-        clock: Callable[[], float] = time.time,
         job_store: JobStore | None = None,
         insights_cache=None,
     ):
@@ -101,9 +99,10 @@ class DataPipelineService:
         # durable twin: pass SqliteJobStore(path) (reference database.rs)
         self.jobs: JobStore = job_store or InMemoryJobStore()
         # job_id -> insights JSON, expiring per the reference's 24 h TTL;
-        # wire twin: pass kvstore.RespKVCache (reference redis.rs)
-        self.insights_cache = insights_cache or TTLCache(
-            ttl_s=insights_ttl_s, clock=clock
+        # wire twin: pass kvstore.RespKVCache (reference redis.rs). An
+        # empty cache is falsy (it has __len__), so test for None.
+        self.insights_cache = (
+            TTLCache() if insights_cache is None else insights_cache
         )
         self.conversations: OrderedDict[str, ConversationContext] = (
             OrderedDict()
@@ -226,11 +225,7 @@ class DataPipelineService:
         history = [t.query for t in ctx.history]
 
         if ir is not None:
-            sq = (
-                StructuredQuery.from_json(ir)
-                if isinstance(ir, (str, dict))
-                else ir
-            )
+            sq = StructuredQuery.from_json(ir)
             sq.validate(available_columns=df.columns)
         elif query_text is not None:
             sq = self._translate(query_text, df, history)

@@ -1,17 +1,11 @@
 from g_data_pipeline_spark.sources.ingest import (
     coerce_types,
-    dataset_metadata,
     land_csv,
-    land_jsonl,
     read_csv,
-    read_jsonl,
 )
 
 __all__ = [
     "coerce_types",
-    "dataset_metadata",
     "land_csv",
-    "land_jsonl",
     "read_csv",
-    "read_jsonl",
 ]

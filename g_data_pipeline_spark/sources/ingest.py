@@ -25,7 +25,6 @@ the documented intent explicitly and testably:
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Any
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -146,78 +145,3 @@ def land_csv(
     df.write.mode("overwrite").parquet(dest)
     return spark.read.parquet(dest), decisions
 
-
-def read_jsonl(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | str | None = None,
-    multiline: bool = False,
-) -> DataFrame:
-    """JSONL (one JSON object per line) scan — the de-facto interchange
-    format for LLM training corpora. Line-delimited JSON splits by line, so
-    a 100 TB corpus parallelizes across executors with no coordination;
-    ``multiline=True`` handles whole-file JSON arrays (NOT splittable — one
-    task per file; avoid at scale). Pass ``schema`` to skip inference (an
-    extra full read) on known corpora; corrupt lines land in
-    ``_corrupt_record`` (PERMISSIVE mode) instead of failing the job."""
-    reader = spark.read.option("multiLine", multiline).option(
-        "columnNameOfCorruptRecord", "_corrupt_record"
-    )
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
-def land_jsonl(
-    spark: SparkSession,
-    src: str,
-    dest: str,
-    schema: T.StructType | str | None = None,
-    normalize_names: bool = True,
-    partition_by: list[str] | None = None,
-) -> DataFrame:
-    """JSONL -> Parquet landing: same one-time columnar conversion as
-    land_csv (JSON parse cost paid once; every later query reads pruned
-    parquet). Rows that failed to parse are dropped after being counted —
-    callers inspect the returned frame's provenance columns if needed."""
-    df = read_jsonl(spark, src, schema=schema)
-    if "_corrupt_record" in df.columns:
-        df = df.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
-    if normalize_names:
-        df = normalize_column_names(df)
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(dest)
-    return spark.read.parquet(dest)
-
-
-def dataset_metadata(df: DataFrame, with_row_count: bool = True) -> dict[str, Any]:
-    """DatasetMetadata {columns, row_count, data_types} from the schema —
-    no rescan (the reference re-downloads + re-parses the whole CSV to build
-    this — conversation.rs:341-442, SURVEY.md §3.3)."""
-    return {
-        "columns": list(df.columns),
-        "row_count": df.count() if with_row_count else None,
-        "data_types": {f.name: f.dataType.simpleString() for f in df.schema.fields},
-    }
-
-
-def land_orc(
-    spark: SparkSession,
-    src: str,
-    dest: str,
-    normalize_names: bool = True,
-    partition_by: list[str] | None = None,
-) -> DataFrame:
-    """ORC -> Parquet landing (interchange with Hive/Trino-era warehouses;
-    ORC is already columnar, so this is a format normalization pass keeping
-    the lake single-format). Same contract as land_csv/land_jsonl."""
-    df = spark.read.orc(src)
-    if normalize_names:
-        df = normalize_column_names(df)
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(dest)
-    return spark.read.parquet(dest)

@@ -138,13 +138,48 @@ def test_query_missing_job_id_400(app):
     assert status == 400
 
 
-@pytest.mark.parametrize("max_rows", [10**12, -1])
+@pytest.mark.parametrize("max_rows", [10**12, -1, None, 1.5, True, "10"])
 def test_query_max_rows_outside_ceiling_400(app, job_id, max_rows):
     req = json.dumps(
         {"job_id": job_id, "query": "average age", "max_rows": max_rows}
     ).encode()
     status, out = call(app, "POST", "/api/conversation/query", body=req)
     assert status == 400 and "max_rows" in out["error"]
+
+
+@pytest.mark.parametrize(
+    "body",
+    [
+        None,
+        5,
+        ["job_id"],
+        {"job_id": [1]},
+        {"job_id": "JOB", "query": 5},
+        {"job_id": "JOB", "conversation_id": [1]},
+        {"job_id": "JOB", "ir": [1, 2]},
+        {"job_id": "JOB", "ir": 5},
+        {"job_id": "JOB", "ir": "[1, 2]"},
+    ],
+    ids=[
+        "body-null",
+        "body-number",
+        "body-array",
+        "job_id-array",
+        "query-number",
+        "conversation_id-array",
+        "ir-array",
+        "ir-number",
+        "ir-string-array",
+    ],
+)
+def test_query_body_and_field_types_400(app, job_id, body):
+    """A body that is not an object, or a field of the wrong JSON type,
+    answers 400 with a JSON error instead of raising out of the app."""
+    if isinstance(body, dict) and body.get("job_id") == "JOB":
+        body = {**body, "job_id": job_id}
+    req = json.dumps(body).encode()
+    status, out = call(app, "POST", "/api/conversation/query", body=req)
+    assert status == 400 and out["error"]
 
 
 def test_query_unknown_job_404(app):

@@ -1,6 +1,6 @@
 """Ingest tests: date/number coercion (the README-promised feature the
 reference never built — SURVEY.md §1.2), name normalization, CSV->Parquet
-landing, metadata without rescans."""
+landing, Parquet compaction."""
 
 from __future__ import annotations
 
@@ -9,12 +9,7 @@ from pathlib import Path
 import pytest
 from pyspark.sql import types as T
 
-from g_data_pipeline_spark.sources import (
-    coerce_types,
-    dataset_metadata,
-    land_csv,
-    read_csv,
-)
+from g_data_pipeline_spark.sources import coerce_types, land_csv, read_csv
 from g_data_pipeline_spark.sources.ingest import (
     normalize_column_names,
     plan_coercions,
@@ -72,56 +67,10 @@ def test_land_csv_roundtrip(spark, tmp_path):
     assert isinstance(schema["income_as_at_joining_scheme"], T.DoubleType)
 
 
-def test_dataset_metadata_no_rescan(spark, people_raw):
-    md = dataset_metadata(people_raw, with_row_count=False)
-    assert md["columns"][0] == "age"
-    assert md["data_types"]["sex"] == "string"
-    md2 = dataset_metadata(people_raw)
-    assert md2["row_count"] == 200
-
-
 def test_normalize_column_names(spark):
     df = spark.createDataFrame([(1, 2)], ["  A  B ", "ok"])
     out = normalize_column_names(df)
     assert out.columns == ["a_b", "ok"]
-
-
-def test_jsonl_roundtrip_and_corrupt_line_handling(spark, tmp_path):
-    from g_data_pipeline_spark.sources import land_jsonl
-
-    src = tmp_path / "docs.jsonl"
-    src.write_text(
-        '{"Doc Id": 1, "text": "hello world", "lang": "en"}\n'
-        'this line is not json\n'
-        '{"Doc Id": 2, "text": "bonjour", "lang": "fr"}\n'
-    )
-    df = land_jsonl(spark, str(src), str(tmp_path / "landed"))
-    rows = {r.doc_id: (r.text, r.lang) for r in df.collect()}
-    assert rows == {1: ("hello world", "en"), 2: ("bonjour", "fr")}
-
-
-def test_jsonl_explicit_schema_partitioned_landing(spark, tmp_path):
-    from g_data_pipeline_spark.sources import land_jsonl
-
-    src = tmp_path / "d.jsonl"
-    src.write_text(
-        '{"id": 1, "lang": "en", "text": "a"}\n'
-        '{"id": 2, "lang": "fr", "text": "b"}\n'
-        '{"id": 3, "lang": "en", "text": "c"}\n'
-    )
-    df = land_jsonl(
-        spark,
-        str(src),
-        str(tmp_path / "landed2"),
-        schema="id bigint, lang string, text string",
-        partition_by=["lang"],
-    )
-    assert df.count() == 3
-    # partition pruning works on the landed layout
-    plan = df.filter(df.lang == "en")._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-    assert any("PartitionFilters" in l and "lang" in l for l in plan.splitlines())
 
 
 def test_compact_parquet_reduces_files_preserves_rows(spark, tmp_path):
@@ -163,24 +112,6 @@ def test_compact_parquet_reduces_files_preserves_rows(spark, tmp_path):
     for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
         assert hi1 < lo2, "output files overlap in key range"
     assert dataset_bytes(spark, dest) > 0
-
-
-def test_land_orc_round_trip(spark, tmp_path):
-    """ORC interchange: write a frame as ORC, land it to parquet, values and
-    schema survive exactly."""
-    from g_data_pipeline_spark.sources.ingest import land_orc
-
-    src = str(tmp_path / "orc_src")
-    dest = str(tmp_path / "orc_landed")
-    df = spark.range(0, 500).selectExpr(
-        "id", "CAST(id % 7 AS INT) AS Bucket Id".replace("Bucket Id", "`Bucket Id`"),
-        "CAST(id AS DOUBLE) / 3 AS v",
-    )
-    df.write.orc(src)
-    landed = land_orc(spark, src, dest)
-    assert "bucket_id" in landed.columns  # names normalized
-    assert landed.count() == 500
-    assert sorted(r.id for r in landed.collect()) == list(range(500))
 
 
 def test_zorder_compact_tightens_boxes_on_both_columns(spark, tmp_path):

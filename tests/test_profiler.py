@@ -84,16 +84,19 @@ def test_correlations_match_pandas(people, people_pd):
 def test_deterministic_mode_agrees_with_default(people):
     """profile()'s built-in mean/stddev/corr agree with the exact-decimal
     deterministic builders the oracle-gated queries use."""
-    from g_data_pipeline_spark.profiler import corr_expr, numeric_stat_exprs
+    from g_data_pipeline_spark.query_defs.reference_surface import (
+        exact_corr_expr,
+        exact_numeric_stat_exprs,
+    )
 
     fast = profile(people)
     exprs = [
         e.alias(f"{stat}_{col}")
         for col in ("age", "score")
-        for stat, e in numeric_stat_exprs(col, deterministic=True).items()
+        for stat, e in exact_numeric_stat_exprs(col).items()
         if stat in ("mean", "std_dev")
     ]
-    exprs.append(corr_expr("age", "score", deterministic=True).alias("corr"))
+    exprs.append(exact_corr_expr("age", "score").alias("corr"))
     det = people.agg(*exprs).collect()[0]
     fb = {s["name"]: s for s in fast["column_statistics"]}
     for col in ("age", "score"):

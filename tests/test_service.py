@@ -10,7 +10,7 @@ import pytest
 
 from g_data_pipeline_spark.llm import FakeLLMClient
 from g_data_pipeline_spark.service import DataPipelineService, JobStatus
-from g_data_pipeline_spark.storage import LocalObjectStore
+from g_data_pipeline_spark.storage import LocalObjectStore, TTLCache
 
 FIXTURE = Path(__file__).parent / "fixtures" / "people.csv"
 
@@ -179,7 +179,9 @@ def test_job_metadata_stores_logical_uris(svc, job_id):
 def test_insights_cache_ttl_expiry(spark, tmp_path):
     now = [1000.0]
     svc = DataPipelineService(
-        spark, str(tmp_path / "ttl"), insights_ttl_s=100.0, clock=lambda: now[0]
+        spark,
+        str(tmp_path / "ttl"),
+        insights_cache=TTLCache(ttl_s=100.0, clock=lambda: now[0]),
     )
     jid = svc.upload_csv(FIXTURE.read_bytes(), "people.csv")
     svc.process_job(jid)
