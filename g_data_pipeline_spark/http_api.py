@@ -17,6 +17,10 @@ Route parity with ``/root/reference/src/main.rs:130-148``:
                                     0..MAX_RESULT_ROWS
     GET  /debug/files               object-store key listing
 
+Query rows arrive already JSON-safe: the service serializes each answer
+once, with date/timestamp values as ISO-8601 strings
+(``service._json_default``), so this layer needs no encoder of its own.
+
 The app is a plain WSGI callable over :class:`DataPipelineService` — any
 WSGI server hosts it (``wsgiref.simple_server`` for local use, gunicorn/etc
 in production); tests drive it in-process with synthetic environs, no ports.
@@ -36,7 +40,6 @@ Upload processing modes:
 
 from __future__ import annotations
 
-import datetime
 import json
 import queue
 import re
@@ -52,14 +55,6 @@ if TYPE_CHECKING:  # import cycle guard: worker imports service only
     from g_data_pipeline_spark.worker import JobWorker
 
 _INSIGHTS_RE = re.compile(r"^/insights/([0-9a-fA-F-]+)$")
-
-
-def _json_default(value: Any) -> str:
-    """Result rows of date/timestamp columns hold ``date``/``datetime``
-    values; they go over the wire as ISO-8601 strings."""
-    if isinstance(value, datetime.date):  # datetime is a date subclass
-        return value.isoformat()
-    raise TypeError(f"Object of type {type(value).__name__} is not JSON serializable")
 
 
 def _parse_multipart_file(content_type: str, body: bytes) -> tuple[str, bytes] | None:
@@ -106,7 +101,7 @@ class PipelineApp:
                 status, payload = "404 Not Found", {"error": "no such route"}
         except (ValueError, KeyError) as exc:
             status, payload = "400 Bad Request", {"error": str(exc)}
-        body = json.dumps(payload, default=_json_default).encode()
+        body = json.dumps(payload).encode()
         start_response(
             status,
             [

@@ -16,7 +16,7 @@ lives in :mod:`g_data_pipeline_spark.plans.compiler`.
 from __future__ import annotations
 
 import json
-from dataclasses import dataclass, field
+from dataclasses import asdict, dataclass, field
 from enum import Enum
 from typing import Any
 
@@ -89,28 +89,65 @@ class StructuredQuery:
                 if op.by is not None and op.by not in known:
                     raise ValueError(f"unknown grouping column {op.by!r} in {op.type}")
 
+    def to_json(self) -> str:
+        """The IR as canonical JSON (sorted keys, compact): the inverse of
+        :meth:`from_json`, so two requests that mean the same query give
+        the same string."""
+        return json.dumps(
+            {
+                "intent": self.intent.value,
+                "columns": self.columns,
+                "operations": [asdict(op) for op in self.operations],
+            },
+            sort_keys=True,
+            separators=(",", ":"),
+        )
+
     @classmethod
     def from_json(cls, payload: str | dict[str, Any]) -> StructuredQuery:
         """Parse the reference's JSON IR (including what its LLM translator
         emits but never parses — SURVEY.md §2.5 N3 calls out the stub; here
-        parsing is implemented for real)."""
+        parsing is implemented for real). Every field is type-checked, so a
+        malformed IR raises ValueError and never reaches validation or the
+        compiler with the wrong type."""
         obj = json.loads(payload) if isinstance(payload, str) else payload
         if not isinstance(obj, dict):
             raise ValueError("the IR must be a JSON object")
         intent = QueryIntent(str(obj.get("intent", "describe")).lower())
+        columns = obj.get("columns", [])
+        if not isinstance(columns, list) or not all(
+            isinstance(c, str) for c in columns
+        ):
+            raise ValueError("columns must be a list of strings")
+        raw_ops = obj.get("operations", [])
+        if not isinstance(raw_ops, list):
+            raise ValueError("operations must be a list")
         ops = []
-        for raw in obj.get("operations", []):
+        for raw in raw_ops:
+            if not isinstance(raw, dict):
+                raise ValueError("each operation must be a JSON object")
             ops.append(
                 ColumnOperation(
                     type=str(raw.get("type", "")).lower(),
-                    column=raw.get("column", ""),
-                    operator=raw.get("operator"),
+                    column=_typed(raw, "column", str, ""),
+                    operator=_typed(raw, "operator", str, None),
                     value=None if raw.get("value") is None else str(raw["value"]),
-                    ascending=bool(raw.get("ascending", True)),
-                    n=raw.get("n"),
-                    by=raw.get("by"),
+                    ascending=_typed(raw, "ascending", bool, True),
+                    n=_typed(raw, "n", int, None),
+                    by=_typed(raw, "by", str, None),
                 )
             )
-        q = cls(intent=intent, columns=list(obj.get("columns", [])), operations=ops)
+        q = cls(intent=intent, columns=columns, operations=ops)
         q.validate()
         return q
+
+
+def _typed(raw: dict[str, Any], key: str, kind: type, default: Any) -> Any:
+    """``raw[key]`` when absent/null -> ``default``; else it must be a JSON
+    value of ``kind`` (exactly: a bool is not an int, "false" not a bool)."""
+    value = raw.get(key)
+    if value is None:
+        return default
+    if type(value) is not kind:
+        raise ValueError(f"operation field {key!r} must be a {kind.__name__}")
+    return value

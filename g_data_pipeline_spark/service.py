@@ -6,7 +6,15 @@ Spark engine (SURVEY.md §3).
   reference re-parsing the CSV on every touch), profiles it, caches insights.
 - insights with recompute-on-miss (§3.2): ``get_insights``.
 - conversation query (§3.3): NL/IR -> compile -> ONE lazy plan -> JSON rows
-  + Chart.js-style visualization spec (V1-V3) + templated prose.
+  + Chart.js-style visualization spec (V1-V3) + templated prose. Answers
+  come from a bounded result cache (a private ``TTLCache``) keyed on
+  ``(job_id, max_rows, StructuredQuery.to_json())``: the validated IR, not
+  the NL text, so an NL request and an IR request that mean the same query
+  share one entry, and conversation history (which only steers the
+  translation) needs no place in the key. A hit runs no Spark job. The
+  cache needs no invalidation: a job's CSV is written once under its uuid
+  and landed once, so its Parquet -- and every answer over it -- never
+  changes. Prose and the conversation turn stay per request.
 
 Storage goes through the :mod:`g_data_pipeline_spark.storage` seam: job
 metadata records *logical* object URIs (``s3a://bucket/key``-style) and every
@@ -23,6 +31,7 @@ reference's dual-uuid quirk, SURVEY.md §3.1).
 
 from __future__ import annotations
 
+import datetime
 import json
 import threading
 import time
@@ -52,6 +61,11 @@ MAX_RESULT_ROWS = 1000
 # Conversation contexts kept in memory; past the cap the least recently
 # used one is evicted (every query without a conversation_id opens one).
 MAX_CONVERSATIONS = 10_000
+
+# Landed datasets kept open (a DataFrame each, with its cached profile
+# plans); past the cap the least recently used is dropped, and the next
+# query on it re-opens its Parquet.
+MAX_DATASETS = 256
 
 
 # Job/JobStatus (and the store seam) live in jobstore.py — re-exported
@@ -108,7 +122,10 @@ class DataPipelineService:
             OrderedDict()
         )
         self._conversations_lock = threading.Lock()
-        self._datasets: dict[str, DataFrame] = {}
+        self._datasets: OrderedDict[str, DataFrame] = OrderedDict()
+        self._datasets_lock = threading.Lock()
+        # (job_id, max_rows, canonical IR) -> serialized answer
+        self._results = TTLCache()
 
     # ---- §3.1 upload -> profile job -------------------------------------
 
@@ -133,7 +150,7 @@ class DataPipelineService:
             csv_path = self.store.resolve(job.file_path)
             parquet_dir = self.store.resolve(self._dataset_uri(job_id))
             df, _ = land_csv(self.spark, csv_path, parquet_dir)
-            self._datasets[job_id] = df
+            self._hold_dataset(job_id, df)
             insights = profile(df)
             self._cache_insights(job_id, insights)
             self.jobs.transition(job_id, JobStatus.COMPLETED)
@@ -167,12 +184,19 @@ class DataPipelineService:
     # ---- §3.3 conversation query -----------------------------------------
 
     def dataset(self, job_id: str) -> DataFrame:
-        df = self._datasets.get(job_id)
-        if df is None:
-            parquet_dir = self.store.resolve(self._dataset_uri(job_id))
-            df = self.spark.read.parquet(parquet_dir)
-            self._datasets[job_id] = df
+        with self._datasets_lock:
+            df = self._datasets.get(job_id)
+            if df is not None:
+                self._datasets.move_to_end(job_id)
+                return df
+        parquet_dir = self.store.resolve(self._dataset_uri(job_id))
+        df = self.spark.read.parquet(parquet_dir)
+        self._hold_dataset(job_id, df)
         return df
+
+    def _hold_dataset(self, job_id: str, df: DataFrame) -> None:
+        with self._datasets_lock:
+            _put_lru(self._datasets, job_id, df, MAX_DATASETS)
 
     def _translate(
         self, query_text: str, df: DataFrame, history: list[str]
@@ -201,16 +225,18 @@ class DataPipelineService:
         None), marked most recently used; evicts the least recently used
         contexts beyond ``MAX_CONVERSATIONS``."""
         with self._conversations_lock:
-            ctx = self.conversations.get(conversation_id)
-            if ctx is None:
-                ctx = ConversationContext(
-                    id=conversation_id or str(uuid.uuid4()), job_id=job_id
-                )
-                self.conversations[ctx.id] = ctx
-            self.conversations.move_to_end(ctx.id)
-            while len(self.conversations) > MAX_CONVERSATIONS:
-                self.conversations.popitem(last=False)
+            ctx = self.conversations.get(conversation_id) or ConversationContext(
+                id=conversation_id or str(uuid.uuid4()), job_id=job_id
+            )
+            _put_lru(self.conversations, ctx.id, ctx, MAX_CONVERSATIONS)
             return ctx
+
+    def _history(self, conversation_id: str | None) -> list[str]:
+        """Prior query texts of a known conversation, without opening or
+        touching its context."""
+        with self._conversations_lock:
+            ctx = self.conversations.get(conversation_id)
+            return [t.query for t in ctx.history] if ctx is not None else []
 
     def query(
         self,
@@ -221,41 +247,58 @@ class DataPipelineService:
         max_rows: int = MAX_RESULT_ROWS,
     ) -> dict[str, Any]:
         df = self.dataset(job_id)
-        ctx = self._conversation(conversation_id, job_id)
-        history = [t.query for t in ctx.history]
-
         if ir is not None:
             sq = StructuredQuery.from_json(ir)
             sq.validate(available_columns=df.columns)
         elif query_text is not None:
-            sq = self._translate(query_text, df, history)
+            sq = self._translate(query_text, df, self._history(conversation_id))
         else:
             raise ValueError("need query_text or ir")
+        # only a request that parsed opens (or touches) a conversation
+        ctx = self._conversation(conversation_id, job_id)
 
-        result = compile_query(df, sq)
-        # Bounded driver fetch: limit(max_rows+1) keeps the cap inside the
-        # plan (TakeOrderedAndProject under a sort), the +1 row only detects
-        # truncation and is dropped before serialization.
-        fetched = result.limit(max_rows + 1).collect()
-        truncated = len(fetched) > max_rows
-        rows = [r.asDict(recursive=True) for r in fetched[:max_rows]]
-        prose = (
-            self.llm.summarize(query_text or str(ir), rows)
+        key = f"{job_id}/{max_rows}/{sq.to_json()}"
+        answer = self._results.get(key)
+        if answer is None:
+            result = compile_query(df, sq)
+            # Bounded driver fetch: limit(max_rows+1) keeps the cap inside
+            # the plan (TakeOrderedAndProject under a sort), the +1 row only
+            # detects truncation and is dropped before serialization.
+            fetched = result.limit(max_rows + 1).collect()
+            rows = [r.asDict(recursive=True) for r in fetched[:max_rows]]
+            out: dict[str, Any] = {"data": rows, "truncated": len(fetched) > max_rows}
+            if sq.intent == QueryIntent.VISUALIZE:
+                out["visualization_data"] = visualization_spec(result, rows)
+            answer = json.dumps(out, default=_json_default)
+            self._results.put(key, answer)
+        # a hit and a miss both answer from the serialized string
+        response: dict[str, Any] = {"conversation_id": ctx.id, **json.loads(answer)}
+        response["response"] = (
+            self.llm.summarize(query_text or str(ir), response["data"])
             if self.llm is not None
-            else _prose_summary(sq, rows)
+            else _prose_summary(sq, response["data"])
         )
-        response: dict[str, Any] = {
-            "conversation_id": ctx.id,
-            "data": rows,
-            "response": prose,
-            "truncated": truncated,
-        }
-        if sq.intent == QueryIntent.VISUALIZE:
-            response["visualization_data"] = visualization_spec(result, rows)
         ctx.history.append(
             ConversationTurn(query=query_text or str(ir), response=response["response"])
         )
         return response
+
+
+def _put_lru(lru: OrderedDict, key: str, value: Any, cap: int) -> None:
+    """Store ``key`` as the most recently used entry, then drop the least
+    recently used ones past ``cap``; the caller holds the map's lock."""
+    lru[key] = value
+    lru.move_to_end(key)
+    while len(lru) > cap:
+        lru.popitem(last=False)
+
+
+def _json_default(value: Any) -> str:
+    """Result rows of date/timestamp columns hold ``date``/``datetime``
+    values; they go over the wire as ISO-8601 strings."""
+    if isinstance(value, datetime.date):  # datetime is a date subclass
+        return value.isoformat()
+    raise TypeError(f"Object of type {type(value).__name__} is not JSON serializable")
 
 
 def _prose_summary(sq: StructuredQuery, rows: list[dict[str, Any]]) -> str:

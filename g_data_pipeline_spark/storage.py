@@ -17,17 +17,27 @@ the seam that makes the backend swappable:
   the filesystem directly, so swapping backends touches nothing else.
 - :class:`LocalObjectStore` — the local-FS fake presenting ``s3a://``-style
   URIs, byte-faithful put/get/list/delete.
-- :class:`TTLCache` — the insights cache with the reference's expiry
-  semantics (``src/services/mod.rs:107``: 24 h TTL). Injectable clock so
-  expiry is testable without sleeping.
+- :class:`TTLCache` — the insights and query-result caches: the
+  reference's expiry semantics (``src/services/mod.rs:107``: 24 h TTL,
+  injectable clock so expiry is testable without sleeping), bounded to
+  ``CACHE_MAX_BYTES`` per cache. An entry counts ``len(key) + len(value)``
+  (characters; the values are ASCII JSON, so about bytes). Past the bound
+  the least recently used entries are evicted on ``put``, so entries that
+  are never read again do not stay forever; an evicted insights entry
+  takes the recompute-on-miss path like an expired one.
 """
 
 from __future__ import annotations
 
+import threading
 import time
 from abc import ABC, abstractmethod
+from collections import OrderedDict
 from collections.abc import Callable
 from pathlib import Path
+
+# Size bound of one TTLCache, in characters of key + value.
+CACHE_MAX_BYTES = 64 << 20
 
 
 class ObjectStore(ABC):
@@ -217,29 +227,51 @@ class HadoopObjectStore(ObjectStore):
 
 class TTLCache:
     """KV cache with per-entry expiry (reference: 24 h insights TTL,
-    ``src/services/mod.rs:107``). ``clock`` is injectable for tests."""
+    ``src/services/mod.rs:107``), bounded to ``CACHE_MAX_BYTES`` as an LRU.
+    ``clock`` is injectable for tests. One lock guards it: request threads
+    and the job worker share one cache."""
 
     def __init__(self, ttl_s: float = 24 * 3600.0, clock: Callable[[], float] = time.time):
         self.ttl_s = ttl_s
         self._clock = clock
-        self._data: dict[str, tuple[float, str]] = {}
+        self._data: OrderedDict[str, tuple[float, str]] = OrderedDict()
+        self._bytes = 0
+        self._lock = threading.Lock()
 
     def get(self, key: str) -> str | None:
-        entry = self._data.get(key)
-        if entry is None:
-            return None
-        written_at, value = entry
-        if self._clock() - written_at >= self.ttl_s:
-            del self._data[key]  # expired -> recompute-on-miss path
-            return None
-        return value
+        with self._lock:
+            entry = self._data.get(key)
+            if entry is None:
+                return None
+            written_at, value = entry
+            if self._clock() - written_at >= self.ttl_s:
+                self._drop(key)  # expired -> recompute-on-miss path
+                return None
+            self._data.move_to_end(key)
+            return value
 
     def put(self, key: str, value: str) -> None:
-        self._data[key] = (self._clock(), value)
+        size = len(key) + len(value)
+        with self._lock:
+            self._drop(key)
+            if size > CACHE_MAX_BYTES:
+                return  # would evict everything else and still not fit
+            self._data[key] = (self._clock(), value)
+            self._bytes += size
+            while self._bytes > CACHE_MAX_BYTES:
+                self._drop(next(iter(self._data)))
 
     def pop(self, key: str) -> str | None:
+        with self._lock:
+            return self._drop(key)
+
+    def _drop(self, key: str) -> str | None:
+        """Remove ``key``, returning its value; the caller holds the lock."""
         entry = self._data.pop(key, None)
-        return entry[1] if entry else None
+        if entry is None:
+            return None
+        self._bytes -= len(key) + len(entry[1])
+        return entry[1]
 
     def __contains__(self, key: str) -> bool:
         return self.get(key) is not None

@@ -159,6 +159,20 @@ def test_query_max_rows_outside_ceiling_400(app, job_id, max_rows):
         {"job_id": "JOB", "ir": [1, 2]},
         {"job_id": "JOB", "ir": 5},
         {"job_id": "JOB", "ir": "[1, 2]"},
+        {"job_id": "JOB", "ir": {"operations": [1]}},
+        {"job_id": "JOB", "ir": {"operations": "sort"}},
+        {"job_id": "JOB", "ir": {"columns": 5}},
+        {"job_id": "JOB", "ir": {"columns": [["age"]]}},
+        {"job_id": "JOB", "ir": {"operations": [
+            {"type": "limit", "column": "a", "n": "x"}]}},
+        {"job_id": "JOB", "ir": {"operations": [
+            {"type": "limit", "column": "age", "n": True}]}},
+        {"job_id": "JOB", "ir": {"operations": [
+            {"type": "sort", "column": "age", "ascending": "false"}]}},
+        {"job_id": "JOB", "ir": {"operations": [
+            {"type": "mean", "column": ["a"]}]}},
+        {"job_id": "JOB", "ir": {"operations": [
+            {"type": "mean", "column": "age", "by": ["sex"]}]}},
     ],
     ids=[
         "body-null",
@@ -170,6 +184,15 @@ def test_query_max_rows_outside_ceiling_400(app, job_id, max_rows):
         "ir-array",
         "ir-number",
         "ir-string-array",
+        "ir-operation-number",
+        "ir-operations-string",
+        "ir-columns-number",
+        "ir-column-array-in-columns",
+        "ir-limit-n-string",
+        "ir-limit-n-bool",
+        "ir-ascending-string",
+        "ir-column-array",
+        "ir-by-array",
     ],
 )
 def test_query_body_and_field_types_400(app, job_id, body):

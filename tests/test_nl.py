@@ -170,3 +170,25 @@ def test_sort_without_target_falls_back_to_describe():
     # no named column and no numeric columns -> nothing to sort on
     sq = rule_based_translate("sort these somehow", ["name"], [])
     assert sq.intent == QueryIntent.DESCRIBE
+
+
+def test_ir_to_json_is_canonical_and_inverts_from_json():
+    from g_data_pipeline_spark.ir import StructuredQuery
+
+    sq = rule_based_translate("top 3 score where age > 30", COLS, NUM)
+    text = sq.to_json()
+    assert StructuredQuery.from_json(text) == sq
+    assert StructuredQuery.from_json(text).to_json() == text
+    # the same query written differently gives the same key
+    spelled = StructuredQuery.from_json(
+        {
+            "operations": [
+                {"value": "30", "operator": ">", "column": "age", "type": "FILTER"},
+                {"type": "sort", "column": "score", "ascending": False},
+                {"n": 3, "column": "score", "type": "limit"},
+            ],
+            "intent": "SORT",
+        }
+    )
+    assert spelled.to_json() == text
+    assert " " not in text and text.index('"columns"') < text.index('"intent"')

@@ -320,3 +320,151 @@ def test_conversation_registry_is_thread_safe(svc, job_id, monkeypatch):
     assert len(contexts) == 300
     assert all(len(objs) == 1 for objs in contexts.values())
     assert len(svc.conversations) == 5
+
+
+# ---- query result cache ---------------------------------------------------
+
+
+def _spark_jobs(svc) -> list[int]:
+    return sorted(svc.spark.sparkContext.statusTracker().getJobIdsForGroup(None))
+
+
+def test_repeated_ir_query_answers_from_cache_without_spark(svc, job_id):
+    ir = {
+        "intent": "visualize",
+        "columns": ["age", "score"],
+        "operations": [
+            {"type": "filter", "column": "age", "operator": ">", "value": "30"}
+        ],
+    }
+    first = svc.query(job_id, ir=ir, max_rows=20)
+    jobs = _spark_jobs(svc)
+    again = svc.query(job_id, ir=ir, max_rows=20)
+    assert _spark_jobs(svc) == jobs  # the hit ran no Spark job
+    assert first["truncated"] is True and len(first["data"]) == 20
+    for key in ("data", "truncated", "visualization_data"):
+        assert again[key] == first[key]
+    assert again["conversation_id"] != first["conversation_id"]
+
+
+def test_nl_and_equivalent_ir_share_one_entry(svc, job_id):
+    nl = svc.query(job_id, query_text="average score by province")
+    entries, jobs = len(svc._results), _spark_jobs(svc)
+    ir = svc.query(
+        job_id,
+        ir={
+            "intent": "aggregate",
+            "operations": [{"type": "mean", "column": "score", "by": "province"}],
+        },
+    )
+    assert len(svc._results) == entries and _spark_jobs(svc) == jobs
+    assert ir["data"] == nl["data"]
+
+
+def test_max_rows_keys_separate_entries(svc, job_id):
+    ir = {
+        "intent": "filter",
+        "columns": ["age", "sex"],
+        "operations": [
+            {"type": "filter", "column": "age", "operator": ">=", "value": "0"}
+        ],
+    }
+    entries = len(svc._results)
+    five = svc.query(job_id, ir=ir, max_rows=5)
+    fifty = svc.query(job_id, ir=ir, max_rows=50)
+    assert len(svc._results) == entries + 2
+    assert len(five["data"]) == 5 and len(fifty["data"]) == 50
+    assert fifty["data"][:5] == five["data"]
+
+
+def test_history_is_appended_on_a_hit(svc, job_id):
+    svc.query(job_id, query_text="what is the average score?")  # warm the entry
+    jobs = _spark_jobs(svc)
+    out1 = svc.query(job_id, query_text="what is the average score?")
+    assert _spark_jobs(svc) == jobs
+    cid = out1["conversation_id"]
+    assert len(svc.conversations[cid].history) == 1
+    out2 = svc.query(job_id, query_text="and the total?", conversation_id=cid)
+    assert "sum_score" in out2["data"][0]  # 'score' came from the cached turn
+    assert len(svc.conversations[cid].history) == 2
+
+
+def test_rejected_request_opens_no_conversation(svc, job_id):
+    before = len(svc.conversations)
+    with pytest.raises(ValueError):
+        svc.query(job_id, ir=[1, 2])
+    with pytest.raises(ValueError):
+        svc.query(job_id, ir={"columns": ["nope"]}, conversation_id="rejected")
+    with pytest.raises(ValueError):
+        svc.query(job_id, conversation_id="rejected")
+    assert len(svc.conversations) == before
+    assert "rejected" not in svc.conversations
+
+
+def test_datasets_are_capped(svc, job_id, spark, monkeypatch):
+    import g_data_pipeline_spark.service as service_mod
+
+    monkeypatch.setattr(service_mod, "MAX_DATASETS", 2)
+    ir = {"intent": "aggregate", "operations": [{"type": "sum", "column": "age"}]}
+    before = svc.query(job_id, ir=ir, max_rows=10)
+    for other in ("lru-a", "lru-b"):
+        spark.range(3).write.parquet(svc.store.resolve(svc._dataset_uri(other)))
+        assert svc.dataset(other).count() == 3
+    assert list(svc._datasets) == ["lru-a", "lru-b"]  # the oldest went
+    after = svc.query(job_id, ir=ir, max_rows=9)  # a miss: re-opens the Parquet
+    assert after["data"] == before["data"]
+    assert list(svc._datasets) == ["lru-b", job_id]
+
+
+def test_ttl_cache_evicts_least_recently_used(monkeypatch):
+    import g_data_pipeline_spark.storage as storage_mod
+
+    monkeypatch.setattr(storage_mod, "CACHE_MAX_BYTES", 30)
+    cache = TTLCache()
+    for k in ("a", "b", "c"):
+        cache.put(k, "x" * 9)  # 10 each: exactly full
+    assert cache.get("a") is not None  # a is now the most recent
+    cache.put("d", "x" * 9)
+    assert cache.get("b") is None  # least recently used went first
+    assert all(cache.get(k) is not None for k in ("a", "c", "d"))
+    cache.put("e", "x" * 19)  # needs two slots
+    assert [k for k in "acde" if k in cache] == ["d", "e"]
+    cache.put("huge", "x" * 30)  # larger than the cap: not stored
+    assert "huge" not in cache and len(cache) == 2
+
+
+def test_ttl_cache_is_thread_safe(monkeypatch):
+    import sys
+    import threading
+
+    import g_data_pipeline_spark.storage as storage_mod
+
+    monkeypatch.setattr(storage_mod, "CACHE_MAX_BYTES", 200)
+    cache = TTLCache()
+    errors: list = []
+    barrier = threading.Barrier(16)
+
+    def worker(t):
+        try:
+            barrier.wait(timeout=10)
+            for i in range(500):
+                key = f"k{(t * 7 + i) % 40}"
+                cache.put(key, key * 3)
+                value = cache.get(key)
+                assert value is None or value == key * 3
+        except Exception as exc:  # noqa: BLE001 — reported below
+            errors.append(exc)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(t,)) for t in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert errors == []
+    sizes = [len(k) + len(v) for k, (_, v) in cache._data.items()]
+    assert cache._bytes == sum(sizes) <= 200
