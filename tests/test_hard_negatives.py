@@ -28,8 +28,11 @@ def mined(emb):
 
 
 def _exact_topk(emb):
-    """O(n^2) labeled baseline under the same dup filter and tiebreak."""
-    a = emb.select(
+    """O(n^2) labeled baseline under the same dup filter and tiebreak.
+    The anchors are spread over a few partitions so the pairwise scoring
+    runs as several tasks instead of one (the cached table is one
+    partition); the pair set is the same."""
+    a = emb.repartition(4, "vec_id").select(
         F.col("vec_id").alias("anchor_id"), F.col("embedding").alias("va")
     )
     b = emb.select(

@@ -110,10 +110,16 @@ class FakeRespServer(socketserver.ThreadingTCPServer):
             return b"-ERR unknown command '%s'\r\n" % op.encode()
 
 
+def _serve(srv):
+    # shutdown() waits for the serve loop's next poll: poll often so each
+    # test's teardown does not sit out the 0.5 s default
+    srv.serve_forever(poll_interval=0.01)
+
+
 @pytest.fixture()
 def resp_server():
     srv = FakeRespServer()
-    t = threading.Thread(target=srv.serve_forever, daemon=True)
+    t = threading.Thread(target=_serve, args=(srv,), daemon=True)
     t.start()
     yield srv
     srv.shutdown()
@@ -209,7 +215,7 @@ def test_ping_and_len(resp_server):
 def test_getdel_fallback_on_old_server():
     """A pre-6.2 server (no GETDEL) still satisfies pop via GET+DEL."""
     srv = FakeRespServer(support_getdel=False)
-    t = threading.Thread(target=srv.serve_forever, daemon=True)
+    t = threading.Thread(target=_serve, args=(srv,), daemon=True)
     t.start()
     try:
         c = RespKVCache("127.0.0.1", srv.server_address[1], ttl_s=60)

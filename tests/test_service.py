@@ -4,6 +4,9 @@ conversation queries (rules + LLM-JSON + raw IR) with visualization specs."""
 
 from __future__ import annotations
 
+import sys
+import threading
+import time
 from pathlib import Path
 
 import pytest
@@ -272,47 +275,53 @@ def test_conversation_contexts_are_capped(svc, job_id, monkeypatch):
     assert "sum_score" in out["data"][0]  # history of the newest survived
 
 
-def test_conversation_registry_is_thread_safe(svc, job_id, monkeypatch):
-    import sys
-    import threading
-
-    import g_data_pipeline_spark.service as service_mod
-
-    got: list = []
+def _run_concurrently(n_threads, work, deadline_s=60.0):
+    """Run ``work(i)`` on ``n_threads`` threads released together, with the
+    interpreter switching threads every microsecond to widen race windows.
+    One deadline bounds the whole run (not one per join), and a thread
+    still alive at it fails the test. Returns the exceptions raised."""
     errors: list = []
+    barrier = threading.Barrier(n_threads)
 
-    def run(n_threads, work):
-        barrier = threading.Barrier(n_threads)
+    def worker(i):
+        try:
+            barrier.wait(timeout=10)
+            work(i)
+        except Exception as exc:  # noqa: BLE001 — returned to the test
+            errors.append(exc)
 
-        def worker():
-            try:
-                barrier.wait(timeout=10)
-                work()
-            except Exception as exc:  # noqa: BLE001 — reported below
-                errors.append(exc)
-
-        threads = [threading.Thread(target=worker) for _ in range(n_threads)]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join(timeout=60)
-        assert not any(t.is_alive() for t in threads)
-
+    threads = [threading.Thread(target=worker, args=(i,)) for i in range(n_threads)]
     old = sys.getswitchinterval()
     sys.setswitchinterval(1e-6)
     try:
-        # concurrent first opens of one id must share one context
-        run(
-            16,
-            lambda: got.extend(
-                svc._conversation(f"shared-{k}", job_id) for k in range(300)
-            ),
-        )
-        # churn past the cap: eviction never races a lookup
-        monkeypatch.setattr(service_mod, "MAX_CONVERSATIONS", 5)
-        run(16, lambda: [svc._conversation(None, job_id) for _ in range(200)])
+        for t in threads:
+            t.start()
+        end = time.monotonic() + deadline_s
+        for t in threads:
+            t.join(timeout=max(0.0, end - time.monotonic()))
     finally:
         sys.setswitchinterval(old)
+    alive = [t for t in threads if t.is_alive()]
+    assert not alive, f"{len(alive)} threads still running after {deadline_s} s"
+    return errors
+
+
+def test_conversation_registry_is_thread_safe(svc, job_id, monkeypatch):
+    import g_data_pipeline_spark.service as service_mod
+
+    got: list = []
+    # concurrent first opens of one id must share one context
+    errors = _run_concurrently(
+        16,
+        lambda _: got.extend(
+            svc._conversation(f"shared-{k}", job_id) for k in range(300)
+        ),
+    )
+    # churn past the cap: eviction never races a lookup
+    monkeypatch.setattr(service_mod, "MAX_CONVERSATIONS", 5)
+    errors += _run_concurrently(
+        16, lambda _: [svc._conversation(None, job_id) for _ in range(200)]
+    )
     assert errors == []
     contexts: dict = {}
     for ctx in got:
@@ -434,37 +443,18 @@ def test_ttl_cache_evicts_least_recently_used(monkeypatch):
 
 
 def test_ttl_cache_is_thread_safe(monkeypatch):
-    import sys
-    import threading
-
     import g_data_pipeline_spark.storage as storage_mod
 
     monkeypatch.setattr(storage_mod, "CACHE_MAX_BYTES", 200)
     cache = TTLCache()
-    errors: list = []
-    barrier = threading.Barrier(16)
 
-    def worker(t):
-        try:
-            barrier.wait(timeout=10)
-            for i in range(500):
-                key = f"k{(t * 7 + i) % 40}"
-                cache.put(key, key * 3)
-                value = cache.get(key)
-                assert value is None or value == key * 3
-        except Exception as exc:  # noqa: BLE001 — reported below
-            errors.append(exc)
+    def work(t):
+        for i in range(500):
+            key = f"k{(t * 7 + i) % 40}"
+            cache.put(key, key * 3)
+            value = cache.get(key)
+            assert value is None or value == key * 3
 
-    old = sys.getswitchinterval()
-    sys.setswitchinterval(1e-6)
-    try:
-        threads = [threading.Thread(target=worker, args=(t,)) for t in range(16)]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join(timeout=60)
-    finally:
-        sys.setswitchinterval(old)
-    assert errors == []
+    assert _run_concurrently(16, work) == []
     sizes = [len(k) + len(v) for k, (_, v) in cache._data.items()]
     assert cache._bytes == sum(sizes) <= 200
